@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.util.concurrent.{FutureTask, TimeUnit, TimeoutException}
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and prints
   * ONE raw JSON line (build.sbt passes forked stdout through unprefixed so the
   * driver can parse it). Queries run under a watchdog so a hang costs one entry
@@ -54,21 +53,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val timeoutS = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_S", "120").toLong
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench_full.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JIT-warm the calibration loop itself, then take the pre-sweep reading
     calibrate()
@@ -82,22 +69,16 @@ object Bench {
       spark.catalog.clearCache()
     } catch { case _: Throwable => () }
     // dev filter: SPARK_GRAFT_ONLY=q1,q2 benches a subset
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(kv => s(kv._1)))
+    val selected = SparkEntry.queries.filter(kv => GraftSession.only.forall(_(kv._1)))
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      val task = new FutureTask[Unit](() => {
-        spark.sparkContext.setJobGroup(s"bench-$name", name, interruptOnCancel = true)
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      })
-      val t = new Thread(task, s"bench-$name"); t.setDaemon(true); t.start()
       val sec =
-        try { task.get(timeoutS, TimeUnit.SECONDS); (System.nanoTime() - t0) / 1e9 }
-        catch {
-          case _: TimeoutException =>
-            spark.sparkContext.cancelJobGroup(s"bench-$name"); -1.0
-          case _: Throwable => -1.0
-        }
+        try {
+          GraftSession.watchdog(spark, s"bench-$name", name, timeoutS) {
+            fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+          }
+          (System.nanoTime() - t0) / 1e9
+        } catch { case _: Throwable => -1.0 }
       // queries are independent; drop persisted intermediates so one run's
       // caches don't distort the next
       spark.catalog.clearCache()

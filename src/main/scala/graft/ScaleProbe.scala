@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Graphs, Similarity, Temporal, TextOps, TrainPrep}
@@ -25,7 +25,8 @@ import graft.streaming.ChangelogOps
   *  - changelog  — liveMinMax over a high-cardinality retraction history
   *                 (state bounded by distinct live values)
   *
-  * Usage: runMain graft.ScaleProbe [mult] [families]  (env SPARK_GRAFT_SF_DIR)
+  * Usage: runMain graft.ScaleProbe [mult] [families]  (env SPARK_GRAFT_SF_DIR,
+  * SPARK_GRAFT_CPUS; the rungs recorded in BASELINE.md ran on 32 cores)
   */
 object ScaleProbe {
   /** The pre-kernelization cosine: interpreted aggregate/zip_with folds. */
@@ -54,16 +55,7 @@ object ScaleProbe {
       .map(_.split(',').map(_.trim).toSet)
       .getOrElse(Set("lsh", "textdedup", "textdedupdist", "curation", "hotbucket", "semdedup", "updatestore", "relational", "graph", "changelog", "cdc", "persist", "pipeline", "bucketing", "skew", "longdoc", "bpe", "bpedist", "pq", "perceptron", "groupcap", "docstore", "dsir"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // CrossHash.mix relies on non-ANSI Long wrap-around (project-wide
-      // session setting, see CrossHash scaladoc)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def time(name: String, rows: Long)(df: => DataFrame): Unit = {

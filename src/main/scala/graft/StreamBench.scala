@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.streaming.{JdbcSink, Monitoring, StreamOps}
@@ -54,16 +54,10 @@ object StreamBench {
       stateBytes: Long = 0L)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val rate = sys.env.getOrElse("SPARK_GRAFT_STREAM_RATE", "20000").toInt
     val secs = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECS", "20").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_STREAM_OUT", "/tmp/graft_streambench.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
+    val spark = GraftSession.builder(GraftSession.cores)
       // keep every progress event of a run (default 100 would drop the head
       // of a 20 s default-trigger run with sub-100ms batches)
       .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
@@ -669,10 +663,9 @@ object StreamBench {
         finally { rep.close(); Monitoring.detach(spark, mon) }
       }))
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // the monitored A/B variant is opt-in (SPARK_GRAFT_ONLY) — the default
     // sweep measures each kernel once
-    val selected = only.fold(scenarios.filterNot(_._1 == "asof_backward_monitored"))(
+    val selected = GraftSession.only.fold(scenarios.filterNot(_._1 == "asof_backward_monitored"))(
       s => scenarios.filter(kv => s(kv._1)))
 
     def json(m: M): String =

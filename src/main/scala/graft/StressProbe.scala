@@ -24,14 +24,8 @@ object StressProbe {
     val nV = args.drop(1).headOption.map(_.toInt).getOrElse(2000)
     var failures = 0
     (1 to runs).foreach { r =>
-      val spark = SparkSession.builder()
-        .master("local[8]")
-        .appName(s"graft-stress-$r")
-        .config("spark.sql.shuffle.partitions", 8)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      // fixed 8 cores: the posture of the RUNBOOK.md stress record
+      val spark = GraftSession.builder(8).appName(s"graft-stress-$r").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       try {
         // deterministic cliques-of-5 with chain bridges: enough structure

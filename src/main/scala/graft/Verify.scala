@@ -1,7 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{FutureTask, TimeUnit, TimeoutException}
+import java.util.concurrent.TimeoutException
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -13,27 +12,12 @@ import java.util.concurrent.{FutureTask, TimeUnit, TimeoutException}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val timeoutS = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_S", "150").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      // naive parquet timestamps stay NTZ (oracle parity with DuckDB's naive TIMESTAMP)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      // events.ts is parquet TIMESTAMP(NANOS): read as Long ns (Spark has no ns timestamps)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev filter: SPARK_GRAFT_ONLY=q1,q2 dumps (and lists oracle SQL for) a subset
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(kv => s(kv._1)))
+    val selected = SparkEntry.queries.filter(kv => GraftSession.only.forall(_(kv._1)))
     // iterate-family rows observed ONCE (r17) returning an empty frame in a
     // fresh JVM (suspected localCheckpoint/AQE race; Iterate.nonEmptyGuard now
     // fails such a pass loudly). These results are non-empty by construction,
@@ -41,13 +25,8 @@ object Verify {
     val nonEmptyByConstruction = Set("iterate_cc", "bellman_ford", "pagerank",
       "pagerank_ref", "louvain", "louvain_multilevel")
     selected.foreach { case (name, fn) =>
-      def runOnce(): Unit = {
-        val task = new FutureTask[Unit](() => {
-          spark.sparkContext.setJobGroup(s"verify-$name", name, interruptOnCancel = true)
-          fn(spark, sfDir).write.mode("overwrite").parquet(s"$outDir/$name")
-        })
-        val t = new Thread(task, s"verify-$name"); t.setDaemon(true); t.start()
-        task.get(timeoutS, TimeUnit.SECONDS)
+      def runOnce(): Unit = GraftSession.watchdog(spark, s"verify-$name", name, timeoutS) {
+        fn(spark, sfDir).write.mode("overwrite").parquet(s"$outDir/$name")
       }
       try {
         runOnce()
@@ -60,7 +39,6 @@ object Verify {
         }
       } catch {
         case _: TimeoutException =>
-          spark.sparkContext.cancelJobGroup(s"verify-$name")
           System.err.println(s"[verify] $name TIMEOUT after ${timeoutS}s")
         case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getCause}")
@@ -80,7 +58,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter(kv => only.forall(_(kv._1)))
+      .filter(kv => GraftSession.only.forall(_(kv._1)))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -1,8 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.{Bpe, Dedup, Materialize, TextOps, TrainPrep}
 
 /** End-to-end LLM training-data curation pipeline — the composition a user
@@ -215,12 +216,7 @@ object TrainDataPipeline {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.ansi.enabled", "false") // CrossHash Long wrap
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
     // stand-in eval set: a slice of the corpus guarantees contamination hits

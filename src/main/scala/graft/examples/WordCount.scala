@@ -1,7 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.sources.Connectors
 import graft.streaming.StreamOps
 
@@ -23,8 +24,7 @@ object WordCount {
 
   def main(args: Array[String]): Unit = {
     val Array(inDir, checkpointDir) = args
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val spark = GraftSession.builder(GraftSession.cores)
       .config("spark.sql.streaming.checkpointLocation", checkpointDir)
       .getOrCreate()
     val lines = Connectors.plaintext(spark, inDir, mode = Connectors.Streaming)

@@ -211,10 +211,9 @@ object Dedup {
     // consumer — fine under minhash dedup's standing input contract that
     // `df` is deterministic under rescan (the signature kernel and `norm`
     // ALWAYS rescan it on separate jobs, fenced or not; a nondeterministic
-    // input was never sound here). Threshold is a session conf; at any
+    // input was never sound here). Threshold is [[LazyFenceRows]]; at any
     // production scale the fenced path runs unchanged.
-    val lazyFences = nSigs <= sess.conf.getOption(LazyFenceRowsConf)
-      .map(_.toLong).getOrElse(DefaultLazyFenceRows)
+    val lazyFences = nSigs <= LazyFenceRows
     var candSets: DataFrame = null
     var prefilteredCached: DataFrame = null
     try {
@@ -524,8 +523,8 @@ object Dedup {
     * boilerplate key can't go quadratic at corpus scale. */
   val DefaultBucketCap: Int = 4096
 
-  /** Session conf: corpora at or below this many docs run [[minhashCore]]
-    * WITHOUT the prefilter/candSet persist+count fences (r21). The fences
+  /** Corpora at or below this many docs run [[minhashCore]] WITHOUT the
+    * prefilter/candSet persist+count fences (r21). The fences
     * exist to stop AQE's parallel subquery jobs from racing an expensive
     * unpopulated cache (r17: 13→4 s / 27→9 s at sf0.1) — below a few
     * thousand docs the whole guarded subtree is cheaper than one fence
@@ -533,8 +532,7 @@ object Dedup {
     * signature table's own persist+count stays (it supplies this count for
     * free); results are identical either way — the branch changes
     * materialization, not the plan's semantics. */
-  val LazyFenceRowsConf = "spark.graft.dedup.lazyFenceRows"
-  val DefaultLazyFenceRows: Long = 2000L
+  val LazyFenceRows: Long = 2000L
 
   /** Shared hot-bucket-guarded band self-join for the whole LSH family
     * (minhashLsh, [[hash64DupPairs]], Similarity.embeddingDupPairs).

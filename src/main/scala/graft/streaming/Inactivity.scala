@@ -259,6 +259,11 @@ object Inactivity {
         timestamp_millis(col("resumed")).as("resumed_activity_timestamp_utc"))
   }
 
+  /** Instance keys per state partition of [[inactivityDetectionReplay]]'s
+    * stateful query (the count is clamped to the session's shuffle
+    * partitions). */
+  val KeysPerStatePartition: Long = 8192L
+
   /** Deterministic EVENT-TIME replay of the streaming kernel over a finite
     * log — the verification harness that pins stream ≡ batch: the SAME
     * `flatMapGroupsWithState` kernel the live path runs, driven through
@@ -302,7 +307,9 @@ object Inactivity {
     require(!span.isNullAt(0), "empty event log")
     val t0 = span.getLong(0)
     val frontier = span.getLong(1)
-    val nInst = span.getLong(2) + 1 // +1: a null instance group count_distinct skips
+    // +1 for a null instance group count_distinct skips; added even when no
+    // null exists — deliberate slack, it only sizes state partitions
+    val nInst = span.getLong(2) + 1
     // batchTicks <= 0 → auto: ~8 event-time chunks. Chunk count is a pure
     // exercise knob (the sorted scan makes results chunking-independent),
     // but each micro-batch pays fixed state-store/shuffle overhead, so a
@@ -373,15 +380,13 @@ object Inactivity {
     // 9 batches ran 64 state-machinery tasks per batch for ~1500 keys of
     // state, and the SAME binary at 8 cores measured FASTER (12.3 s vs 5.8 s,
     // BENCH_r20 vs BENCH_r20_c8) — per-batch fixed cost, not compute. Size
-    // state partitions to the KEY COUNT (keys/partition is a conf, default
-    // 8192), clamped to the session value so a corpus with millions of
+    // state partitions to the KEY COUNT (KeysPerStatePartition keys each),
+    // clamped to the session value so a corpus with millions of
     // instances still spreads across the cluster. Partitioning never changes
     // flatMapGroupsWithState results — grouping is by key, not partition.
     val sessParts = spark.sessionState.conf.numShufflePartitions
-    val keysPer = spark.conf.getOption("spark.graft.replay.keysPerStatePartition")
-      .map(_.toLong).getOrElse(8192L)
-    val stateParts = math.max(1L,
-      math.min(sessParts.toLong, (nInst + keysPer - 1) / keysPer)).toInt
+    val stateParts = math.max(1L, math.min(sessParts.toLong,
+      (nInst + KeysPerStatePartition - 1) / KeysPerStatePartition)).toInt
     // a fresh session scopes the override to this one streaming query.
     // newSession() starts from SparkConf DEFAULTS, not the caller's runtime
     // conf (the Bpe.scala lesson) — carry the caller's SQL settings (state

@@ -19,22 +19,13 @@ object SparkTestBase {
     java.nio.file.Files.createTempDirectory("graft-iceberg-wh").toString
 
   lazy val spark: SparkSession = {
-    var b = SparkSession.builder()
+    var b = GraftSession.builder(4)
       // local[threads, maxFailures]: allow ONE task retry so
       // FaultToleranceSpec can inject first-attempt failures and prove
       // retry-determinism; healthy tasks never retry, so call-count
       // replay specs are unaffected
       .master("local[4, 2]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     val exts = Seq(
       if (deltaPresent) Some("io.delta.sql.DeltaSparkSessionExtension") else None,
       if (icebergPresent)

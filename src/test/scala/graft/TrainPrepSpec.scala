@@ -75,6 +75,40 @@ class TrainPrepSpec extends AnyFunSuite {
       (30L, 10L, true, 3L), (40L, 40L, false, 1L)))
   }
 
+  test("minhashLsh: the fenced path (> LazyFenceRows docs) finds the lazy path's pairs, no more") {
+    import graft.operators.Dedup
+    // 6 planted near-dup families of 4 (a shared random base + a short
+    // per-member tail, jaccard ~0.9) plus 10 unrelated singletons
+    val rnd = new scala.util.Random(21)
+    def words(n: Int) = Seq.fill(n)(rnd.alphanumeric.take(6).mkString.toLowerCase).mkString(" ")
+    val families = (0 until 6).flatMap { f =>
+      val base = words(14)
+      (0 until 4).map(m => (100L * f + m, s"$base ${words(1)}"))
+    }
+    val singletons = (0 until 10).map(i => (1000L + i, words(14)))
+    val small = (families ++ singletons).toDF("doc_id", "text")
+    // filler whose tokens are all unique (hex digests of distinct ids) lifts
+    // the corpus past the lazy-fence threshold
+    val filler = spark.range(2100).select((col("id") + 1000000L).as("doc_id"),
+      concat_ws(" ", sha2(col("id").cast("string"), 256), md5(col("id").cast("string")))
+        .as("text"))
+    val big = small.unionByName(filler)
+    assert(small.count() <= Dedup.LazyFenceRows && big.count() > Dedup.LazyFenceRows)
+
+    def run(docs: org.apache.spark.sql.DataFrame): Set[(Long, Long, Boolean)] =
+      Dedup.minhashLsh(docs, col("doc_id"), col("text"))
+        .as[(Long, Long, Boolean)].collect().toSet
+    val lazyOut = run(small)
+    // every family member resolves to its family's smallest id
+    assert(lazyOut == (families ++ singletons).map { case (id, _) =>
+      val rep = if (id < 1000L) id - id % 100 else id
+      (id, rep, rep != id)
+    }.toSet)
+    val fencedOut = run(big)
+    assert(fencedOut.filter(_._1 < 1000000L) == lazyOut)
+    assert(fencedOut.filter(_._1 >= 1000000L).forall { case (id, rep, dup) => rep == id && !dup })
+  }
+
   test("hot-bucket guard: embedding SRP pileup emits star candidates, pairs verify") {
     import graft.operators.Similarity
     // 30 identical embeddings (every SRP table hashes them to one bucket) +
