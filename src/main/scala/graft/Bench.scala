@@ -1,4 +1,5 @@
 package graft
+import java.util.concurrent.TimeoutException
 import org.apache.spark.sql.SparkSession
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and prints
   * ONE raw JSON line (build.sbt passes forked stdout through unprefixed so the
@@ -67,7 +68,7 @@ object Bench {
         .groupBy("n_regionkey").count()
         .write.mode("overwrite").format("noop").save()
       spark.catalog.clearCache()
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
     // dev filter: SPARK_GRAFT_ONLY=q1,q2 benches a subset
     val selected = SparkEntry.queries.filter(kv => GraftSession.only.forall(_(kv._1)))
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
@@ -78,7 +79,14 @@ object Bench {
             fn(spark, sfDir).write.mode("overwrite").format("noop").save()
           }
           (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+        } catch {
+          case _: TimeoutException =>
+            System.err.println(s"[bench] $name TIMEOUT after ${timeoutS}s")
+            -1.0
+          case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${GraftSession.failureCause(e)}")
+            -1.0
+        }
       // queries are independent; drop persisted intermediates so one run's
       // caches don't distort the next
       spark.catalog.clearCache()
@@ -165,7 +173,9 @@ object Bench {
           ",\n  \"sf\": \"" + sfDir + "\",\n  \"queries\": {\n", ",\n", "\n  }\n}\n")
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+    } catch {
+      case e: Throwable => System.err.println(s"[bench] writing $outPath failed: $e")
+    }
     spark.stop()
     sys.exit(0)
   }

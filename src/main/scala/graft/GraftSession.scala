@@ -37,7 +37,8 @@ object GraftSession {
     * at most `timeoutS` seconds, so a hung query costs one entry, not the
     * whole run. On timeout the group's jobs are cancelled and the
     * TimeoutException is rethrown; a failure inside `body` surfaces as an
-    * ExecutionException carrying it as the cause. */
+    * ExecutionException carrying it as the cause ([[failureCause]] unwraps
+    * it). */
   def watchdog(spark: SparkSession, group: String, description: String, timeoutS: Long)(
       body: => Unit): Unit = {
     val task = new FutureTask[Unit](() => {
@@ -52,4 +53,9 @@ object GraftSession {
         throw e
     }
   }
+
+  /** What to report for a failure caught around [[watchdog]]: the wrapped
+    * cause, or the exception itself when nothing wraps it (a failure
+    * outside the watchdog). */
+  def failureCause(e: Throwable): Throwable = Option(e.getCause).getOrElse(e)
 }

@@ -44,7 +44,10 @@ import graft.streaming.StreamOps.{AsofEvent, AsofJoinState, AsofNearestState}
   * SPARK_GRAFT_STREAM_OUT (default /tmp/graft_streambench.json).
   * Knobs: SPARK_GRAFT_STREAM_RATE (rows/s, default 20000),
   * SPARK_GRAFT_STREAM_SECS (per-scenario wall time, default 20),
-  * SPARK_GRAFT_ONLY (comma filter), SPARK_GRAFT_CPUS.
+  * SPARK_GRAFT_STREAM_OUT (artifact path), SPARK_GRAFT_STATE_STORE
+  * (`rocksdb` selects the RocksDB provider, default in-memory),
+  * SPARK_GRAFT_SPOOL_FILES (sync_spool_drain files per member, default 300),
+  * SPARK_GRAFT_ONLY (comma filter), SPARK_GRAFT_CPUS (default 4).
   */
 object StreamBench {
 
@@ -184,53 +187,9 @@ object StreamBench {
         .otherwise(col("value"))
       val text = concat_ws(" ",
         (0 until 6).map(i => md5(concat(lit(s"w$i"), seed))): _*)
-      // bench knob: SPARK_GRAFT_MINHASH_BANDS sweeps the bands/recall-vs-
-      // state-rows trade (state rows and stateful groups scale with bands)
-      val bands = sys.env.getOrElse("SPARK_GRAFT_MINHASH_BANDS", "8").toInt
-      // r15 A/B lever: per-batch distinct-signature pre-aggregation
-      val preAgg = sys.env.getOrElse("SPARK_GRAFT_MINHASH_PREAGG", "false").toBoolean
       StreamOps.minhashDedupStream(
           rateSrc.select(col("value").as("doc_id"), text.as("text")),
-          col("doc_id"), col("text"), bands = bands, threshold = 0.7,
-          preAggregate = preAgg)
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt()).start()
-    }
-
-    /** The r13 coarse-state-topology variant of minhash_dedup: state rows
-      * bounded by bands·coarse (SPARK_GRAFT_MINHASH_COARSE, default 4096)
-      * instead of one row per live band-bucket — same emitted pairs
-      * (StreamingSpec). A/B against minhash_dedup isolates whether the
-      * state-store ROW TOPOLOGY (456k rows/60k docs) or the per-row write
-      * size binds throughput. */
-    def startMinhashDedupCoarse(): StreamingQuery = {
-      val seed = when(col("value") % 20 === 0, col("value") % 5 - 10)
-        .otherwise(col("value"))
-      val text = concat_ws(" ",
-        (0 until 6).map(i => md5(concat(lit(s"w$i"), seed))): _*)
-      val bands = sys.env.getOrElse("SPARK_GRAFT_MINHASH_BANDS", "8").toInt
-      val coarse = sys.env.getOrElse("SPARK_GRAFT_MINHASH_COARSE", "4096").toInt
-      StreamOps.minhashDedupStreamCoarse(
-          rateSrc.select(col("value").as("doc_id"), text.as("text")),
-          col("doc_id"), col("text"), bands = bands, threshold = 0.7,
-          coarse = coarse)
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt()).start()
-    }
-
-    /** A/B decomposition for minhash_dedup: the STATELESS signature map
-      * alone (same synthetic docs, same MD5×numHashes kernel, no band
-      * shuffle, no state). If this saturates at ≈ the full kernel's rate,
-      * the per-doc signature CPU is the binding cost and a further
-      * stateless/stateful split cannot win — the r11 open question. */
-    def startMinhashSigOnly(): StreamingQuery = {
-      val seed = when(col("value") % 20 === 0, col("value") % 5 - 10)
-        .otherwise(col("value"))
-      val text = concat_ws(" ",
-        (0 until 6).map(i => md5(concat(lit(s"w$i"), seed))): _*)
-      graft.operators.Dedup.minhashSignatures(
-          rateSrc.select(col("value").as("doc_id"), text.as("text")),
-          col("doc_id"), col("text"), k = 5, numHashes = 32)
+          col("doc_id"), col("text"), bands = 8, threshold = 0.7)
         .writeStream.outputMode("append").format("noop")
         .option("checkpointLocation", ckpt()).start()
     }
@@ -357,6 +316,14 @@ object StreamBench {
       ps.flatMap(p => Option(p.durationMs.get("triggerExecution"))
         .map(_.toLong)).sorted.toArray)
 
+    /** Prints a failed scenario's full exception to stderr and returns the
+      * short name its row records as `err`. */
+    def failed(name: String, e: Throwable): String = {
+      System.err.println(s"[streambench] $name failed:")
+      e.printStackTrace()
+      e.getClass.getSimpleName
+    }
+
     def measure(name: String, start: () => StreamingQuery): M = {
       val t0 = System.nanoTime()
       try {
@@ -388,7 +355,7 @@ object StreamBench {
       } catch {
         case e: Throwable =>
           M(name, rate, (System.nanoTime() - t0) / 1e9, 0, 0, 0, -1, -1, -1, 0, 0,
-            err = e.getClass.getSimpleName)
+            err = failed(name, e))
       }
     }
 
@@ -435,7 +402,7 @@ object StreamBench {
       } catch {
         case e: Throwable =>
           M("wordcount_convergence", 0, (System.nanoTime() - t0) / 1e9, 0, 0, 0,
-            -1, -1, -1, 0, 0, err = e.getClass.getSimpleName)
+            -1, -1, -1, 0, 0, err = failed("wordcount_convergence", e))
       } finally q.stop()
     }
 
@@ -489,9 +456,6 @@ object StreamBench {
           .option("group", "sb_spool").option("member", member)
           .option("maxDifference", maxDiff.toString)
           .option("groupSize", "2")
-          // A/B lever for the r15 compaction item: with compaction on, the
-          // per-trigger listing term shrinks as the drain proceeds
-          .option("compact", sys.env.getOrElse("SPARK_GRAFT_SPOOL_COMPACT", "false"))
           .load()
           .writeStream.format("noop")
           .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(10))
@@ -554,7 +518,7 @@ object StreamBench {
       } catch {
         case e: Throwable =>
           M("sync_spool_drain", nFiles, (System.nanoTime() - t0) / 1e9, 0, 0, 0,
-            -1, -1, -1, 0, 0, err = e.getClass.getSimpleName)
+            -1, -1, -1, 0, 0, err = failed("sync_spool_drain", e))
       } finally { // 2·nFiles tiny JSON files — don't leak them into /tmp.
         // Best-effort: a cleanup IO error must not replace the measurement
         // result already computed in the try, and the walk stream must close
@@ -621,7 +585,7 @@ object StreamBench {
       } catch {
         case e: Throwable =>
           M("recovery_catchup", rate, (System.nanoTime() - t00) / 1e9, 0, 0, 0,
-            -1, -1, -1, 0, 0, err = e.getClass.getSimpleName)
+            -1, -1, -1, 0, 0, err = failed("recovery_catchup", e))
       }
     }
 
@@ -634,8 +598,6 @@ object StreamBench {
       "tumbling_agg" -> (() => measure("tumbling_agg", startTumblingAgg _)),
       "dedup_acceptor" -> (() => measure("dedup_acceptor", startDedupAcceptor _)),
       "minhash_dedup" -> (() => measure("minhash_dedup", startMinhashDedup _)),
-      "minhash_dedup_coarse" -> (() => measure("minhash_dedup_coarse", startMinhashDedupCoarse _)),
-      "minhash_sig_only" -> (() => measure("minhash_sig_only", startMinhashSigOnly _)),
       "curation_ingest" -> (() => measure("curation_ingest", startCurationIngest _)),
       "upsert_jdbc" -> (() => measure("upsert_jdbc", startUpsertJdbc _)),
       "changelog_upsert" -> (() => measure("changelog_upsert", startChangelogUpsert _)),
@@ -690,7 +652,9 @@ object StreamBench {
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (results.map(json).mkString("[\n  ", ",\n  ", "\n]\n"))
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
+    catch {
+      case e: Throwable => System.err.println(s"[streambench] writing $outPath failed: $e")
+    }
     spark.stop()
     sys.exit(0)
   }

@@ -41,7 +41,7 @@ object Verify {
         case _: TimeoutException =>
           System.err.println(s"[verify] $name TIMEOUT after ${timeoutS}s")
         case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getCause}")
+          System.err.println(s"[verify] $name failed: ${GraftSession.failureCause(e)}")
       }
       spark.catalog.clearCache() // per-query persisted intermediates
     }

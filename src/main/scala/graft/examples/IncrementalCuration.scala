@@ -21,8 +21,8 @@ import graft.streaming.Persistence
   *      makes the view deterministic under growth),
   *   2. `Persistence.runStatic` commits it as the next parquet generation
   *      and returns the distributed unit-diff vs the previous generation
-  *      (one count-aggregate shuffle — ScaleProbe: 6M rows diffed in
-  *      ~1.6 s on local[32]).
+  *      (one count-aggregate shuffle — 6M rows diffed in ~1.6 s on
+  *      local[32], BASELINE.md "r17 persistence probe").
   *
   * Run: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 runMain
   *      graft.examples.IncrementalCuration

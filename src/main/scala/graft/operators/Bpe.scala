@@ -197,7 +197,7 @@ object Bpe {
     *
     * Worst case (every top pair interacting) degenerates to one merge per
     * super-step — still two SMALL jobs, vs r11's full pair re-aggregation
-    * per merge. Measured on a 181k-word Zipf table (ScaleProbe `bpedist`):
+    * per merge. Measured on a 181k-word Zipf table (BASELINE.md r12 BPE rungs):
     * batches of 3-6 across the whole 2k-merge run, 2k merges ≈ 3 min at
     * local[32], ~0.5 jobs/merge vs r11's ~2.9; at a production 20M-word
     * vocabulary the per-step win is the shuffle volume (touched-pair

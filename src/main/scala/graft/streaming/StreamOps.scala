@@ -216,7 +216,8 @@ object StreamOps {
       // state = packed members: [id:Long][sig:Long×numHashes] each — a flat
       // byte array serializes as-is through the state store, where the
       // first-cut Seq[(Long, Seq[Long])] state paid a nested Tungsten
-      // encode/decode per arrival (measured 3.3k docs/s → see StreamBench)
+      // encode/decode per arrival (first cut measured 3.3k docs/s; packed-
+      // state rungs: BASELINE.md "Full streaming sweep r11")
       val entry = 8 * (numHashes + 1)
       var buf = if (state.exists) state.get else Array.emptyByteArray
       var bb = java.nio.ByteBuffer.wrap(buf)
@@ -258,135 +259,19 @@ object StreamOps {
       out.iterator
     }
 
-  /** [[minhashDedupKernel]] with PER-MICRO-BATCH candidate pre-aggregation
-    * (r15 item 7): a batch's arrivals are grouped by IDENTICAL signature
-    * first, so the held-member scan runs once per DISTINCT signature and
-    * the intra-batch comparison runs once per distinct-signature PAIR —
-    * each result expands to every carrier id. Compare count never exceeds
-    * the fine kernel's (distinct ≤ arrivals), and collapses when a batch
-    * floods a bucket with byte-identical content; the cost is one
-    * hash-grouping pass per batch. Emitted pair SET is identical to the
-    * fine kernel's (order may differ; StreamingSpec pins the equivalence).
-    * A capped invocation (state + batch past bucketCap) delegates to the
-    * sequential fine kernel, whose arrival-interleaved cap semantics are
-    * the contract. */
-  def minhashDedupKernelPreAgg(numHashes: Int, threshold: Double, bucketCap: Int):
-      ((Int, Long), Iterator[(Long, Seq[Long], Int, Long)],
-        GroupState[Array[Byte]]) => Iterator[(Long, Long, Double)] =
-    (key, rows, state) => {
-      val entry = 8 * (numHashes + 1)
-      val buf0 = if (state.exists) state.get else Array.emptyByteArray
-      val n0 = buf0.length / entry
-      val batch = rows.toArray
-      if (n0 + batch.length > bucketCap)
-        minhashDedupKernel(numHashes, threshold, bucketCap)(key, batch.iterator, state)
-      else {
-        val bb = java.nio.ByteBuffer.wrap(buf0)
-        val held = scala.collection.mutable.HashSet.empty[Long]
-        var i = 0
-        while (i < n0) { held += bb.getLong(i * entry); i += 1 }
-        // distinct signatures in first-arrival order + their carrier ids
-        val order = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-        val carriers = scala.collection.mutable.ArrayBuffer
-          .empty[scala.collection.mutable.ArrayBuffer[Long]]
-        val index = scala.collection.mutable.HashMap.empty[Seq[Long], Int]
-        batch.foreach { case (id, sigSeq, _, _) =>
-          if (!held(id)) {
-            held += id
-            index.get(sigSeq) match {
-              case Some(gi) => carriers(gi) += id
-              case None =>
-                index(sigSeq) = order.length
-                order += sigSeq.toArray
-                carriers += scala.collection.mutable.ArrayBuffer(id)
-            }
-          }
-        }
-        val d = order.length
-        val out = scala.collection.mutable.ListBuffer.empty[(Long, Long, Double)]
-        var g = 0
-        while (g < d) { // one held-member scan per DISTINCT signature
-          val sig = order(g)
-          var m = 0
-          while (m < n0) {
-            val base = m * entry
-            var eq = 0; var s = 0
-            while (s < numHashes) {
-              if (bb.getLong(base + 8 + 8 * s) == sig(s)) eq += 1; s += 1
-            }
-            val est = eq.toDouble / numHashes
-            if (est >= threshold) {
-              val oid = bb.getLong(base)
-              carriers(g).foreach(id =>
-                out += ((math.min(id, oid), math.max(id, oid), est)))
-            }
-            m += 1
-          }
-          g += 1
-        }
-        g = 0
-        while (g < d) { // intra-batch: distinct-signature pairs (+ 1.0 clusters)
-          val cg = carriers(g)
-          var j = 0
-          while (j < cg.length) {
-            var l = j + 1
-            while (l < cg.length) {
-              out += ((math.min(cg(j), cg(l)), math.max(cg(j), cg(l)), 1.0)); l += 1
-            }
-            j += 1
-          }
-          var h = g + 1
-          while (h < d) {
-            val a = order(g); val b = order(h)
-            var eq = 0; var s = 0
-            while (s < numHashes) { if (a(s) == b(s)) eq += 1; s += 1 }
-            val est = eq.toDouble / numHashes
-            if (est >= threshold)
-              for (x <- carriers(g); y <- carriers(h))
-                out += ((math.min(x, y), math.max(x, y), est))
-            h += 1
-          }
-          g += 1
-        }
-        // cap is not binding on this path: append every new id
-        val newIds = carriers.iterator.map(_.length).sum
-        if (newIds > 0) {
-          val nb = java.util.Arrays.copyOf(buf0, buf0.length + newIds * entry)
-          val b2 = java.nio.ByteBuffer.wrap(nb)
-          var off = buf0.length
-          g = 0
-          while (g < d) {
-            val sig = order(g)
-            carriers(g).foreach { id =>
-              b2.putLong(off, id)
-              var s = 0
-              while (s < numHashes) { b2.putLong(off + 8 + 8 * s, sig(s)); s += 1 }
-              off += entry
-            }
-            g += 1
-          }
-          state.update(nb)
-        } else state.update(buf0)
-        out.iterator
-      }
-    }
-
   /** [[minhashDedupKernel]] wired end-to-end: streaming (or batch) docs in,
-    * (id1, id2, est_jaccard) candidate stream out. `preAggregate` selects
-    * the per-batch distinct-signature kernel (r15 A/B: 1.38× capacity on
-    * the synthetic ingest — real, but the regime stays compare-CPU +
-    * commit bound at a few thousand docs/s per 8 cores; BASELINE.md r15).
-    * For CORPUS-scale dedup use the batch path
-    * ([[graft.operators.Dedup.dedupPipeline]]) — this kernel is for
-    * live-ingest near-dup flagging at ingest rates. */
+    * (id1, id2, est_jaccard) candidate stream out. For CORPUS-scale dedup
+    * use the batch path ([[graft.operators.Dedup.dedupPipeline]]) — this
+    * kernel is for live-ingest near-dup flagging at ingest rates. The
+    * pre-aggregating and coarse-state kernel variants were measured and
+    * closed (BASELINE.md r13 state-topology and r15 pre-aggregation). */
   def minhashDedupStream(df: DataFrame, id: Column, text: Column,
       k: Int = 5, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.8,
-      bucketCap: Int = graft.operators.Dedup.DefaultBucketCap,
-      preAggregate: Boolean = false): DataFrame = {
+      bucketCap: Int = graft.operators.Dedup.DefaultBucketCap): DataFrame = {
     require(numHashes % bands == 0, s"numHashes=$numHashes must divide into bands=$bands")
-    // preAgg emits identical-signature pairs at est 1.0 unconditionally; a
-    // threshold > 1.0 would make the two kernels' pair sets diverge.
+    // the estimate is a fraction of matching slots, so a threshold above
+    // 1.0 can never match: reject it rather than emit a silently empty stream
     require(threshold <= 1.0, s"threshold=$threshold must be <= 1.0")
     val sess = df.sparkSession
     import sess.implicits._
@@ -400,127 +285,7 @@ object StreamOps {
       .as[(Long, Seq[Long], Int, Long)]
       .groupByKey(r => (r._3, r._4))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        if (preAggregate) minhashDedupKernelPreAgg(numHashes, threshold, bucketCap)
-        else minhashDedupKernel(numHashes, threshold, bucketCap))
-      .toDF("id1", "id2", "est_jaccard")
-  }
-
-  /** [[minhashDedupKernel]] with COARSE state keys — the r13 state-topology
-    * experiment. The stateful group is (band, floorMod(bucket, coarse))
-    * instead of (band, bucket): state-store ROW COUNT is bounded by
-    * bands·coarse where the fine kernel grows one row per live band-bucket
-    * (456k rows per 60k docs at bands=8 — the measured r12 throughput
-    * binder). Each coarse slot packs the members of every true bucket
-    * hashing to it, the true bucket id stored per member
-    * ([bucket][id][sig×numHashes] entries), so comparisons AND the
-    * bucketCap still apply only within the true bucket — emitted pairs are
-    * identical to the fine kernel's (StreamingSpec pins the equivalence).
-    * The trade: per-arrival scans touch the whole slot (≈ members/coarse
-    * per band) and a touched slot rewrites a larger state value — the
-    * `coarse` knob positions row-count overhead against write
-    * amplification. Appends batch into ONE copy per slot per micro-batch
-    * (the fine kernel re-copies per arrival). */
-  def minhashDedupKernelCoarse(numHashes: Int, threshold: Double, bucketCap: Int):
-      ((Int, Long), Iterator[(Long, Seq[Long], Int, Long)],
-        GroupState[Array[Byte]]) => Iterator[(Long, Long, Double)] =
-    (_, rows, state) => {
-      val entry = 8 * (numHashes + 2)
-      val buf = if (state.exists) state.get else Array.emptyByteArray
-      val bb = java.nio.ByteBuffer.wrap(buf)
-      val n0 = buf.length / entry
-      val out = scala.collection.mutable.ListBuffer.empty[(Long, Long, Double)]
-      val appended = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Array[Long])]
-      rows.foreach { case (id, sigSeq, _, bucket) =>
-        val sig = new Array[Long](numHashes)
-        var s = 0
-        while (s < numHashes) { sig(s) = sigSeq(s); s += 1 }
-        // membership / dup-id scan over this TRUE bucket (state + in-batch)
-        var dup = false
-        var cnt = 0
-        var m = 0
-        while (m < n0 && !dup) {
-          val base = m * entry
-          if (bb.getLong(base) == bucket) {
-            if (bb.getLong(base + 8) == id) dup = true else cnt += 1
-          }
-          m += 1
-        }
-        var a = 0
-        while (a < appended.length && !dup) {
-          if (appended(a)._1 == bucket) {
-            if (appended(a)._2 == id) dup = true else cnt += 1
-          }
-          a += 1
-        }
-        if (!dup) {
-          m = 0
-          while (m < n0) {
-            val base = m * entry
-            if (bb.getLong(base) == bucket) {
-              var eq = 0; s = 0
-              while (s < numHashes) {
-                if (bb.getLong(base + 16 + 8 * s) == sig(s)) eq += 1; s += 1
-              }
-              val est = eq.toDouble / numHashes
-              if (est >= threshold) {
-                val oid = bb.getLong(base + 8)
-                out += ((math.min(id, oid), math.max(id, oid), est))
-              }
-            }
-            m += 1
-          }
-          a = 0
-          while (a < appended.length) {
-            val (ab, aid, asig) = appended(a)
-            if (ab == bucket) {
-              var eq = 0; s = 0
-              while (s < numHashes) { if (asig(s) == sig(s)) eq += 1; s += 1 }
-              val est = eq.toDouble / numHashes
-              if (est >= threshold)
-                out += ((math.min(id, aid), math.max(id, aid), est))
-            }
-            a += 1
-          }
-          if (cnt < bucketCap) appended += ((bucket, id, sig))
-        }
-      }
-      if (appended.nonEmpty) {
-        val nb = java.util.Arrays.copyOf(buf, buf.length + entry * appended.length)
-        val b2 = java.nio.ByteBuffer.wrap(nb)
-        var off = buf.length
-        appended.foreach { case (bk, aid, sig) =>
-          b2.putLong(off, bk); b2.putLong(off + 8, aid)
-          var s = 0
-          while (s < numHashes) { b2.putLong(off + 16 + 8 * s, sig(s)); s += 1 }
-          off += entry
-        }
-        state.update(nb)
-      }
-      out.iterator
-    }
-
-  /** [[minhashDedupKernelCoarse]] wired end-to-end — same contract as
-    * [[minhashDedupStream]], state rows bounded by bands·coarse. */
-  def minhashDedupStreamCoarse(df: DataFrame, id: Column, text: Column,
-      k: Int = 5, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.8,
-      bucketCap: Int = graft.operators.Dedup.DefaultBucketCap,
-      coarse: Int = 4096): DataFrame = {
-    require(numHashes % bands == 0, s"numHashes=$numHashes must divide into bands=$bands")
-    require(threshold <= 1.0, s"threshold=$threshold must be <= 1.0")
-    val sess = df.sparkSession
-    import sess.implicits._
-    val rpb = numHashes / bands
-    val sigs = graft.operators.Dedup.minhashSignatures(df, id, text, k, numHashes)
-    val bandKeys = (0 until bands).map { b =>
-      xxhash64(lit(b) +: (b * rpb until (b + 1) * rpb).map(s => col("_mins")(s)): _*)
-    }
-    sigs.select(col("id"), col("_mins"),
-        posexplode(array(bandKeys: _*)).as(Seq("_band", "_bucket")))
-      .as[(Long, Seq[Long], Int, Long)]
-      .groupByKey(r => (r._3, java.lang.Math.floorMod(r._4, coarse.toLong)))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        minhashDedupKernelCoarse(numHashes, threshold, bucketCap))
+        minhashDedupKernel(numHashes, threshold, bucketCap))
       .toDF("id1", "id2", "est_jaccard")
   }
 

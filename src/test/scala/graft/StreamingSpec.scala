@@ -97,96 +97,30 @@ class StreamingSpec extends AnyFunSuite {
     q2.stop()
   }
 
-  test("pre-aggregated minhash kernel emits the same pair set as the fine kernel") {
+  test("minhash stream: identical-signature flood, near-dup and re-delivered id") {
     implicit val sql = spark.sqlContext
     val base = "the quick brown fox jumps over the lazy dog while seventeen " +
       "astronauts deliberate about breakfast in the orbital cafeteria"
-    def run(preAgg: Boolean): Set[(Long, Long)] = {
-      val input = MemoryStream[(Long, String)]
-      val q = StreamOps.minhashDedupStream(input.toDF().toDF("doc_id", "text"),
-          col("doc_id"), col("text"), threshold = 0.7, preAggregate = preAgg)
-        .writeStream.format("memory").queryName(s"mh_pa_$preAgg")
-        .outputMode("append").start()
-      // batch 1: an identical-signature flood plus an unrelated doc
-      input.addData((1L, base), (2L, base), (3L, base),
-        (50L, "an entirely unrelated note about volcano insurance premiums"))
-      q.processAllAvailable()
-      // batch 2: near-dup (distinct sig) + more of the flood + id re-delivery
-      input.addData((4L, base + " tail"), (5L, base), (3L, base))
-      q.processAllAvailable()
-      val out = spark.table(s"mh_pa_$preAgg").select("id1", "id2").distinct()
-        .as[(Long, Long)].collect().toSet
-      q.stop()
-      out
-    }
-    val fine = run(preAgg = false)
-    val pre = run(preAgg = true)
-    assert(fine == pre && fine.nonEmpty, s"fine=$fine preAgg=$pre")
-    // the flood must actually have linked: 1-2-3-5 clique plus 4 via near-dup
-    assert(pre.contains((1L, 2L)) && pre.contains((1L, 5L)))
-
-    // capped invocation delegates to the fine kernel: star pairs only
-    val input2 = MemoryStream[(Long, String)]
-    val q2 = StreamOps.minhashDedupStream(input2.toDF().toDF("doc_id", "text"),
-        col("doc_id"), col("text"), threshold = 0.7, bucketCap = 2,
-        preAggregate = true)
-      .writeStream.format("memory").queryName("mh_pa_capped")
+    val input = MemoryStream[(Long, String)]
+    val q = StreamOps.minhashDedupStream(input.toDF().toDF("doc_id", "text"),
+        col("doc_id"), col("text"), threshold = 0.7)
+      .writeStream.format("memory").queryName("mh_flood")
       .outputMode("append").start()
-    input2.addData((1L, base), (2L, base))
-    q2.processAllAvailable()
-    input2.addData((3L, base), (4L, base))
-    q2.processAllAvailable()
-    val got = spark.table("mh_pa_capped").select("id1", "id2").distinct()
+    // batch 1: an identical-signature flood plus an unrelated doc
+    input.addData((1L, base), (2L, base), (3L, base),
+      (50L, "an entirely unrelated note about volcano insurance premiums"))
+    q.processAllAvailable()
+    // batch 2: near-dup (distinct sig) + more of the flood + id re-delivery
+    input.addData((4L, base + " tail"), (5L, base), (3L, base))
+    q.processAllAvailable()
+    val out = spark.table("mh_flood").select("id1", "id2").distinct()
       .as[(Long, Long)].collect().toSet
-    assert(got == Set((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L), (2L, 4L)),
-      s"star pairs only, got $got")
-    q2.stop()
-  }
-
-  test("coarse-state minhash kernel emits the same pairs as the fine kernel") {
-    implicit val sql = spark.sqlContext
-    val base = "the quick brown fox jumps over the lazy dog while seventeen " +
-      "astronauts deliberate about breakfast in the orbital cafeteria"
-    // coarse=1: EVERY band's buckets share one state row per band — the
-    // maximal-collision stress; comparisons must still respect true buckets
-    for (coarse <- Seq(1, 7)) {
-      val input = MemoryStream[(Long, String)]
-      val pairs = StreamOps.minhashDedupStreamCoarse(
-        input.toDF().toDF("doc_id", "text"),
-        col("doc_id"), col("text"), threshold = 0.7, coarse = coarse)
-      val q = pairs.writeStream.format("memory").queryName(s"mh_coarse_$coarse")
-        .outputMode("append").start()
-      input.addData((1L, base),
-        (50L, "an entirely unrelated note about volcano insurance premiums"))
-      q.processAllAvailable()
-      assert(spark.table(s"mh_coarse_$coarse").count() == 0, "no dups yet")
-      input.addData((2L, base + " tail"), (3L, base)) // same-batch + history
-      q.processAllAvailable()
-      input.addData((3L, base)) // re-delivery: dup id must not re-pair
-      q.processAllAvailable()
-      val out = spark.table(s"mh_coarse_$coarse").select("id1", "id2").distinct()
-        .as[(Long, Long)].collect().toSet
-      assert(out == Set((1L, 2L), (1L, 3L), (2L, 3L)), s"coarse=$coarse got $out")
-      q.stop()
-
-      // cap semantics survive coarse packing: star pairs only
-      val input2 = MemoryStream[(Long, String)]
-      val capped = StreamOps.minhashDedupStreamCoarse(
-        input2.toDF().toDF("doc_id", "text"),
-        col("doc_id"), col("text"), threshold = 0.7, bucketCap = 2,
-        coarse = coarse)
-      val q2 = capped.writeStream.format("memory").queryName(s"mh_coarse_cap_$coarse")
-        .outputMode("append").start()
-      input2.addData((1L, base), (2L, base))
-      q2.processAllAvailable()
-      input2.addData((3L, base), (4L, base))
-      q2.processAllAvailable()
-      val got = spark.table(s"mh_coarse_cap_$coarse").select("id1", "id2").distinct()
-        .as[(Long, Long)].collect().toSet
-      assert(got == Set((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L), (2L, 4L)),
-        s"coarse=$coarse star pairs only, got $got")
-      q2.stop()
-    }
+    q.stop()
+    // 1, 2, 3 and 5 carry `base` and 4 is its near-dup: every pair among
+    // them, none with 50, and the re-delivered 3 adds no self-pair
+    val ids = Seq(1L, 2L, 3L, 4L, 5L)
+    val expected = (for (a <- ids; b <- ids if a < b) yield (a, b)).toSet
+    assert(out == expected, s"got $out")
   }
 
   test("changelog roundtrip: toStream then streamToTable recovers the snapshot") {
