@@ -1603,10 +1603,6 @@ object SparkEntry {
   private def qBellmanFord(s: SparkSession, dir: String): DataFrame =
     Graphs.bellmanFord(nationEdges(s, dir), sourceId = 0L)
 
-  /** unroll stays 1: chaining the 3 passes into one materialization was
-    * measured cost-neutral warm (~1.8 s both ways at sf0.1) and the 3×
-    * plan triples first-run codegen latency — per-pass job overhead is not
-    * the binding constraint here, whole-stage compilation is. */
   private def qPagerank(s: SparkSession, dir: String): DataFrame =
     Graphs.pagerank(nationEdges(s, dir).select("src", "dst"), iters = 3)
 

@@ -3,14 +3,16 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Graph algorithms built on Iterate.fixpoint, mirroring the reference's
-  * stdlib (pagerank stdlib/graphs/pagerank/impl.py:18, bellman_ford
-  * stdlib/graphs/bellman_ford/impl.py:42, both ~40-line compositions over
-  * `pw.iterate`).
+/** Graph algorithms built on the [[Iterate]] loops, mirroring the
+  * reference's stdlib (pagerank stdlib/graphs/pagerank/impl.py:18,
+  * bellman_ford stdlib/graphs/bellman_ford/impl.py:42, both ~40-line
+  * compositions over `pw.iterate`).
   *
   * Edges are a DataFrame (src, dst[, weight]). All joins are key-partitioned
   * shuffle joins — the same sharding the reference's dataflow uses — and each
-  * iteration's state is checkpointed by Iterate so lineage stays flat.
+  * iteration's state is checkpointed by Iterate (one pass per checkpoint,
+  * local or FS-backed per [[Materialize.ReliableConf]]) so lineage stays
+  * flat.
   */
 object Graphs {
 
@@ -25,8 +27,7 @@ object Graphs {
     * paying full-width task scheduling per pass — at real scale pass the
     * session width (or None) back. */
   def connectedComponents(edges: DataFrame, src: String = "src", dst: String = "dst",
-      maxIterations: Int = 50, unroll: Int = 1,
-      numPartitions: Option[Int] = None): DataFrame = {
+      maxIterations: Int = 50, numPartitions: Option[Int] = None): DataFrame = {
     val sym0 = edges.select(col(src).as("u"), col(dst).as("v"))
       .unionByName(edges.select(col(dst).as("u"), col(src).as("v")))
       .distinct()
@@ -57,8 +58,7 @@ object Graphs {
       val r = df.agg(count(lit(1)), sum("component")).head
       val n = r.getLong(0)
       (n, if (n == 0) 0L else r.getLong(1)): (Long, Any)
-    }, maxIterations, unroll = unroll,
-      nonEmptyGuard = true)
+    }, maxIterations, nonEmptyGuard = true)
     // the fixpoint result is materialized (checkpointed by its own
     // fingerprint action) — the edge cache is no longer referenced
     sym.unpersist(false)
@@ -69,7 +69,7 @@ object Graphs {
     * recommended for exact convergence checks. Unreachable vertices omitted. */
   def bellmanFord(edges: DataFrame, sourceId: Long,
       src: String = "src", dst: String = "dst", weight: String = "weight",
-      maxIterations: Int = 50, unroll: Int = 1): DataFrame = {
+      maxIterations: Int = 50): DataFrame = {
     // loop-invariant edge list: every relaxation pass joins it — cache it so
     // the input plan (often a join/projection chain) runs once, not per pass
     val e = edges.select(col(src).as("u"), col(dst).as("v"), col(weight).as("w"))
@@ -92,7 +92,7 @@ object Graphs {
       // anyway (same empty-frame rule as connectedComponents)
       val n = r.getLong(0)
       (n, (n, if (n == 0) 0L else r.getLong(1))): (Long, Any)
-    }, maxIterations, unroll = unroll, nonEmptyGuard = true)
+    }, maxIterations, nonEmptyGuard = true)
     e.unpersist(false)
     out
   }
@@ -103,7 +103,7 @@ object Graphs {
     * Each pass every vertex adopts the most frequent label among its
     * neighbors (ties → smallest label, deterministic); `iters` fixed passes. */
   def labelPropagation(edges: DataFrame, iters: Int = 5,
-      src: String = "src", dst: String = "dst", unroll: Int = 1): DataFrame = {
+      src: String = "src", dst: String = "dst"): DataFrame = {
     val sym = edges.select(col(src).as("u"), col(dst).as("v"))
       .unionByName(edges.select(col(dst).as("u"), col(src).as("v")))
       .distinct()
@@ -117,7 +117,7 @@ object Graphs {
         .partitionBy(col("vertex")).orderBy(col("_n").desc, col("label").asc)
       counted.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
         .select(col("vertex"), col("label"))
-    }, iters, unroll = unroll, nonEmptyGuard = true)
+    }, iters, nonEmptyGuard = true)
   }
 
   /** Louvain-style community detection: synchronous modularity-gain moves
@@ -131,13 +131,13 @@ object Graphs {
     * community id — deterministic). All steps are equi-joins + aggregations on
     * (vertex | community) keys; 2m is the only driver scalar. */
   def louvain(edges: DataFrame, iters: Int = 10,
-      src: String = "src", dst: String = "dst", unroll: Int = 1): DataFrame = {
+      src: String = "src", dst: String = "dst"): DataFrame = {
     val sym = symWeighted(edges, src, dst)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = sym.groupBy(col("u").as("vertex")).agg(sum("w").as("k"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val m2 = sym.count().toDouble // = 2m
-    val moved = louvainMoves(sym, deg, m2, iters, unroll)
+    val moved = louvainMoves(sym, deg, m2, iters)
     // the move loop's result is checkpoint-materialized — the edge/degree
     // caches are releasable the moment it returns (r21, VERDICT #4)
     sym.unpersist(false); deg.unpersist(false)
@@ -185,7 +185,7 @@ object Graphs {
     * from structure. Same score arithmetic, twice the joins per pass;
     * only [[louvainAuto]] pays that. */
   private def louvainMoves(sym: DataFrame, deg: DataFrame, m2: Double,
-      iters: Int, unroll: Int, alternate: Boolean = false): DataFrame = {
+      iters: Int, alternate: Boolean = false): DataFrame = {
     val initial = deg.select(col("vertex"), col("vertex").as("community"), col("k"))
     def movePass(labels: DataFrame, parity: Option[Int]): DataFrame = {
       val comVol = labels.groupBy("community").agg(sum("k").as("vol"))
@@ -224,22 +224,21 @@ object Graphs {
     }
     // converged-early-stop: a pass that moves nothing makes all remaining
     // passes no-ops (deterministic step), so labels are bit-identical to the
-    // full `iters` unroll — the oracle's fixed-pass CTEs stay exact — and
+    // full `iters` passes — the oracle's fixed-pass CTEs stay exact — and
     // contracted levels (which converge in 1-2 passes) skip the rest.
     // Non-alternate passes carry their own moved counter → the free
-    // nTimesUntilNoChange stop; alternate (two sub-passes per block — only
+    // nTimesUntilNoChange stop; alternate (two sub-passes per pass — only
     // the SECOND sub-pass's flag would survive the chain) keeps the exact
     // exceptAll compare.
     val looped =
-      if (!alternate && unroll == 1) Iterate.nTimesUntilNoChange(initial,
+      if (!alternate) Iterate.nTimesUntilNoChange(initial,
         labels => movePass(labels, None), iters, changedCol = "_moved",
         nonEmptyGuard = true)
       else Iterate.nTimesConverged(initial, labels =>
         // the exceptAll compare needs pass schema == initial schema — the
         // moved flag is the no-change path's concern, drop it here
-        (if (alternate) movePass(movePass(labels, Some(0)), Some(1))
-         else movePass(labels, None)).drop("_moved"),
-        iters, unroll = unroll, nonEmptyGuard = true)
+        movePass(movePass(labels, Some(0)), Some(1)).drop("_moved"),
+        iters, nonEmptyGuard = true)
     looped.select(col("vertex"), col("community"))
   }
 
@@ -292,19 +291,19 @@ object Graphs {
     * graph is |communities| vertices, so level 2 costs a fraction of level 1;
     * 2m is conserved so modularity comparisons stay on the original scale. */
   def louvainMultilevel(edges: DataFrame, iters1: Int = 4, iters2: Int = 4,
-      src: String = "src", dst: String = "dst", unroll: Int = 1): DataFrame = {
+      src: String = "src", dst: String = "dst"): DataFrame = {
     val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sym = symWeighted(edges, src, dst).persist(mem)
     val deg = sym.groupBy(col("u").as("vertex")).agg(sum("w").as("k")).persist(mem)
     val m2 = sym.count().toDouble
-    val l1 = louvainMoves(sym, deg, m2, iters1, unroll).persist(mem)
+    val l1 = louvainMoves(sym, deg, m2, iters1).persist(mem)
     // the contracted graph is scanned by EVERY level-2 move pass — cache it
     // (lazy: the first pass populates, passes are sequential so no AQE race;
     // left lazy, each pass re-runs the contraction joins — r20)
     val (superSym0, superDeg0) = contract(sym, deg, l1)
     val superSym = superSym0.persist(mem)
     val superDeg = superDeg0.persist(mem)
-    val l2 = louvainMoves(superSym, superDeg, m2, iters2, unroll)
+    val l2 = louvainMoves(superSym, superDeg, m2, iters2)
     // louvainMoves' result is checkpoint-materialized by its own loop fence,
     // so the move-pass inputs are releasable the moment it returns; the
     // final compose joins only l1 × l2, so materializing it (vertex-count
@@ -330,9 +329,8 @@ object Graphs {
     * Returns (vertex, community) on the ORIGINAL vertex ids; use
     * [[louvainAutoTrace]] to also observe the per-level modularity. */
   def louvainAuto(edges: DataFrame, itersPerLevel: Int = 4, maxLevels: Int = 10,
-      minGain: Double = 1e-9, src: String = "src", dst: String = "dst",
-      unroll: Int = 1): DataFrame =
-    louvainAutoTrace(edges, itersPerLevel, maxLevels, minGain, src, dst, unroll)._1
+      minGain: Double = 1e-9, src: String = "src", dst: String = "dst"): DataFrame =
+    louvainAutoTrace(edges, itersPerLevel, maxLevels, minGain, src, dst)._1
 
   /** [[louvainAuto]] plus the per-level modularity trace. A level is
     * ACCEPTED only if its modularity beats the previous accepted level by
@@ -344,8 +342,8 @@ object Graphs {
     * strictly increasing by construction, and the final assignment never
     * loses to any prefix of levels. */
   def louvainAutoTrace(edges: DataFrame, itersPerLevel: Int = 4, maxLevels: Int = 10,
-      minGain: Double = 1e-9, src: String = "src", dst: String = "dst",
-      unroll: Int = 1): (DataFrame, Seq[Double]) = {
+      minGain: Double = 1e-9, src: String = "src", dst: String = "dst")
+      : (DataFrame, Seq[Double]) = {
     val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // every intermediate persist is tracked and released once the final
     // mapping is materialized — a 10-level run would otherwise leave ~4
@@ -370,7 +368,7 @@ object Graphs {
       // converge (quad left split across 2 communities). Synchronous damage
       // is not only contracted-graph swap-oscillation; parity damping is
       // load-bearing for convergence QUALITY on the original graph too.
-      val l = pin(louvainMoves(sym, deg, m2, itersPerLevel, unroll, alternate = true))
+      val l = pin(louvainMoves(sym, deg, m2, itersPerLevel, alternate = true))
       val q = levelModularity(sym, deg, l, m2)
       if (q - prevQ <= minGain) done = true // reject: keep the prior levels' labels
       else {
@@ -460,7 +458,7 @@ object Graphs {
     * base (1-d)/n mass (contributions only flow along edges; matches the
     * reference's simple formulation, stdlib/graphs/pagerank/impl.py:18). */
   def pagerank(edges: DataFrame, iters: Int = 3, dampNum: Long = 85, dampDen: Long = 100,
-      scale: Long = 1000000000000L, unroll: Int = 1): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     // loop invariants (edge list, vertex set, out-degrees) cached: every
     // pass joins all three — left lazy, each pass re-paid the distinct /
     // union / aggregation shuffles of the input plan (r20, guide §5). The
@@ -485,7 +483,7 @@ object Graphs {
         .select(col("vertex"),
           (lit(baseFp) + expr(s"($dampNum * coalesce(mass, CAST(0 AS BIGINT))) div $dampDen"))
             .as("rank"))
-    }, iters, unroll = unroll, nonEmptyGuard = true)
+    }, iters, nonEmptyGuard = true)
     e.unpersist(false); vertices.unpersist(false); outDeg.unpersist(false)
     out
   }

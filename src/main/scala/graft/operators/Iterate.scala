@@ -2,63 +2,47 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, lit, sum}
-import org.apache.spark.storage.StorageLevel
 
 /** Fixed-point iteration of a DataFrame transformation (reference
   * `pw.iterate`, python/pathway/internals/common.py:39; engine loop
   * src/engine/dataflow.rs:5046 via timely Variable loops).
   *
   * Spark has no dataflow loop primitive, so the driver re-evaluates the step
-  * function until the result stops changing (or `maxIterations`). Each pass is
-  * persisted and checkpointed so the lineage does NOT grow with the iteration
-  * count — unbounded lineage is the classic Spark iterative-job failure mode
-  * (stack overflows in the planner at scale).
+  * function until a stop rule holds (or the iteration limit). Every public
+  * variant is a stop rule over ONE private pass loop: each pass is
+  * checkpointed through [[Materialize.pass]], so the lineage does NOT grow
+  * with the iteration count — unbounded lineage is the classic Spark
+  * iterative-job failure mode (stack overflows in the planner at scale).
   *
-  * Per-pass job shape (fingerprint variant): ONE job computes the step and
-  * populates the cache (the fingerprint aggregate rides on it), then the eager
-  * checkpoint copies from cache — the heavy shuffle work runs exactly once per
-  * pass. Fingerprints are remembered across passes, never recomputed on `prev`.
+  * Per-pass job shape: the pass's summary action (row count plus the stop
+  * rule's aggregate) materializes the lazily checkpointed pass as it runs —
+  * the step's shuffle work runs exactly once per pass and no separate copy
+  * job follows. Summaries are remembered across passes, never recomputed on
+  * `prev`.
   *
-  * Fault tolerance: `localCheckpoint` stores partitions on executors — fast,
-  * but an executor loss mid-loop destroys non-recomputable lineage. On a real
-  * cluster set a checkpoint dir (`sc.setCheckpointDir`) and pass
-  * `reliable = true` to use HDFS-backed `checkpoint` instead.
+  * Local vs FS-backed checkpoints is the one session switch
+  * `spark.graft.reliableCheckpoint` read by [[Materialize]]: on a real
+  * cluster set a checkpoint dir (`sc.setCheckpointDir`) and the conf to
+  * `true`.
+  *
+  * Passes are never chained lazily between checkpoints: every graph step
+  * here reads its input more than once (self-union, join-back), so k
+  * chained passes replicate the unmaterialized subplan exponentially
+  * (measured: louvain 3 s → 31 s at 2 passes per checkpoint; pagerank
+  * cost-neutral, with 3× first-run codegen latency).
   *
   * Batch-only by design: the reference supports iterate over streams via
   * timely loops; we document that divergence (SURVEY.md known-hard #3).
   */
 object Iterate {
 
-  // `reliable` is the explicit per-call request; the session-wide
-  // [[Materialize.ReliableConf]] knob (r19 judge #1) ORs in so one conf flip
-  // covers the iterate family together with the other fan-out sites.
-  //
-  // The pre-checkpoint persist is RELEASED once the eager checkpoint holds
-  // the data (r21, VERDICT #4): `df.persist(...).checkpoint/localCheckpoint`
-  // registers a CacheManager entry on df's plan that the returned
-  // LogicalRDD-backed frame can never release — every loop pass leaked one
-  // pinned entry for the session's lifetime (CacheHygieneSpec pins this).
-  // The checkpoint blocks are the RDD's own; dropping the InMemoryRelation
-  // copy after materialization is safe and halves the storage.
-  private def materialize(df: DataFrame, reliable: Boolean): DataFrame = {
-    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    val out =
-      if (reliable || Materialize.reliable(df.sparkSession)) cached.checkpoint(true)
-      else cached.localCheckpoint(true)
-    cached.unpersist(false)
-    out
-  }
-
   /** Loud-failure invariant for steps that preserve non-emptiness (every
     * graph algorithm here iterates a vertex-keyed table whose key set never
     * shrinks): a pass that turns a non-empty table EMPTY is a runtime fault
-    * (observed once: a localCheckpoint under AQE returned an empty frame),
-    * not a legal fixpoint — fail the job with a diagnosable error instead of
-    * silently returning nothing. The row count comes from the pass's OWN
-    * materializing action (the counted fingerprint, or the count that
-    * materializes a lazy checkpoint), so the fence costs zero extra jobs
-    * (r18 judge #2 — the post-materialize `isEmpty` was a second action
-    * per pass). */
+    * (observed once: an executor-local checkpoint under AQE returned an
+    * empty frame), not a legal fixpoint — fail the job with a diagnosable
+    * error instead of silently returning nothing. The row count comes from the pass's OWN
+    * summary action, so the fence costs zero extra jobs. */
   private def guardCount(count: Long, enabled: Boolean, pass: Int): Unit =
     if (enabled && count == 0)
       throw new IllegalStateException(
@@ -66,133 +50,74 @@ object Iterate {
           "this step preserves cardinality, so an empty result is a " +
           "materialization fault (retry the job), not a fixpoint")
 
+  /** A pass's (row count, stop state), from one action on the pass. */
+  private type Summary = DataFrame => (Long, Any)
+
+  /** Stop rule over (prev, prevSummary, next, nextSummary). */
+  private type Stop = (DataFrame, (Long, Any), DataFrame, (Long, Any)) => Boolean
+
+  /** Row count only: a plain RDD count is the one job that materializes a
+    * lazily checkpointed pass — no aggregate shuffle behind it. */
+  private val counted: Summary = df => (df.queryExecution.toRdd.count(), ())
+
+  /** The pass loop under every public variant: checkpoint `initial` with
+    * summary `first`, then up to `limit` passes of `step`, each checkpointed
+    * with summary `each`; after each pass but the last, `stop` may end the
+    * loop early (the final pass ends it anyway — a rule that costs a job,
+    * like [[defaultConverged]], is never paid there). The non-empty fence
+    * arms iff `nonEmptyGuard` and `initial` has rows. */
+  private def loop(initial: DataFrame, step: DataFrame => DataFrame, limit: Int,
+      nonEmptyGuard: Boolean, each: Summary, first: Summary = counted)(
+      stop: Stop): DataFrame = {
+    // reference pw.iterate raises ValueError on a non-positive
+    // iteration_limit (tests/test_common.py test_iterate_with_wrong_limit)
+    require(limit >= 1, s"iteration limit $limit must be >= 1")
+    var (current, summary) = Materialize.pass(initial)(first)
+    val guard = nonEmptyGuard && summary._1 > 0
+    var i = 0
+    var done = false
+    while (i < limit && !done) {
+      val (next, nextSummary) = Materialize.pass(step(current))(each)
+      guardCount(nextSummary._1, guard, i)
+      done = i + 1 < limit && stop(current, summary, next, nextSummary)
+      current = next
+      summary = nextSummary
+      i += 1
+    }
+    current
+  }
+
   /** Fixpoint with a per-pass COUNTED scalar fingerprint. `fingerprint`
     * returns `(rowCount, summary)` from ONE aggregate action — e.g.
     * `df.agg(count(lit(1)), sum("x")).head` — where the summary is a
     * deterministic driver-side value such that fingerprint(step(x)) ==
     * fingerprint(x) ⇔ convergence — true for any monotone state (labels
     * only decrease, distances only shrink, reach only grows). Evaluated
-    * ONCE per materialization, in the same job that populates the cache;
-    * the rowCount rides the same aggregate, so the non-empty fence is free.
-    *
-    * `unroll` chains that many step applications lazily between
-    * materializations. WARNING — only profitable when the step consumes its
-    * input EXACTLY ONCE (a linear pipeline): a step that references its input
-    * r times (self-union, join-back — every graph algorithm here) replicates
-    * the previous pass's unmaterialized subplan r× per level, i.e. r^unroll
-    * plan growth (measured: louvain 3 s → 31 s at unroll=2). Default 1 =
-    * materialize every pass. For a MONOTONE fingerprint unroll>1 is still an
-    * exact convergence test: if any chained pass changed the state, the
-    * fingerprint moved; the loop may run up to `unroll − 1` extra idempotent
-    * passes past the fixpoint. */
+    * ONCE per pass, in the job that materializes it; the rowCount rides the
+    * same aggregate, so the non-empty fence is free. */
   def fixpointByFingerprint(initial: DataFrame, step: DataFrame => DataFrame,
       fingerprint: DataFrame => (Long, Any), maxIterations: Int = 50,
-      reliable: Boolean = false, unroll: Int = 1,
-      nonEmptyGuard: Boolean = false): DataFrame = {
-    require(unroll >= 1, s"unroll=$unroll must be >= 1")
-    // reference pw.iterate raises ValueError on a non-positive
-    // iteration_limit (tests/test_common.py test_iterate_with_wrong_limit)
-    require(maxIterations >= 1, s"iteration limit $maxIterations must be >= 1")
-    var current = materialize(initial, reliable)
-    var fp = fingerprint(current)
-    val guard = nonEmptyGuard && fp._1 > 0
-    var i = 0
-    var done = false
-    while (i < maxIterations && !done) {
-      val k = math.min(unroll, maxIterations - i)
-      val stepped = (1 to k).foldLeft(current)((df, _) => step(df))
-      // lazy checkpoint mark + fingerprint action = ONE job per group: the
-      // aggregate materializes the checkpointed partitions as it runs, so no
-      // separate copy job follows (reliable checkpoints stay eager — their
-      // write happens on re-execution otherwise)
-      val next =
-        if (reliable || Materialize.reliable(stepped.sparkSession))
-          materialize(stepped, reliable) // releases its pre-checkpoint cache
-        else stepped.localCheckpoint(false)
-      val nfp = fingerprint(next)
-      guardCount(nfp._1, guard, i)
-      done = nfp == fp
-      fp = nfp
-      current.unpersist()
-      current = next
-      i += k
-    }
-    current
-  }
+      nonEmptyGuard: Boolean = false): DataFrame =
+    loop(initial, step, maxIterations, nonEmptyGuard, fingerprint, fingerprint)(
+      (_, fp, _, nfp) => nfp == fp)
 
-  /** General fixpoint with a pairwise convergence predicate. Prefer
-    * `fixpointByFingerprint` when a monotone one-row summary exists — this
-    * variant re-reads both passes in `converged`. */
+  /** General fixpoint: stops when a pass leaves the table unchanged
+    * ([[defaultConverged]]). Prefer `fixpointByFingerprint` when a monotone
+    * one-row summary exists — this variant re-reads both passes. */
   def fixpoint(initial: DataFrame, step: DataFrame => DataFrame,
-      maxIterations: Int = 50,
-      converged: (DataFrame, DataFrame) => Boolean = defaultConverged,
-      reliable: Boolean = false, nonEmptyGuard: Boolean = false): DataFrame = {
-    require(maxIterations >= 1, s"iteration limit $maxIterations must be >= 1")
-    var current = materialize(initial, reliable)
-    val guard = nonEmptyGuard && !current.isEmpty
-    var i = 0
-    var done = false
-    while (i < maxIterations && !done) {
-      val (next, n) = materializeCounted(step(current), reliable, guard)
-      guardCount(n, guard, i)
-      done = converged(current, next)
-      current.unpersist()
-      current = next
-      i += 1
-    }
-    current
-  }
-
-  /** Materialize a pass and return its row count WITHOUT a second action:
-    * when the fence is on (and checkpoints are local), the pass is marked
-    * for lazy checkpointing and the `count()` action materializes it — one
-    * job, count included. With the fence off (or reliable checkpoints,
-    * which must stay eager), the plain eager materialization runs and the
-    * count is reported as "non-empty" without a job. */
-  private def materializeCounted(df: DataFrame, reliable: Boolean,
-      counted: Boolean): (DataFrame, Long) = {
-    val rel = reliable || Materialize.reliable(df.sparkSession)
-    if (counted && !rel) {
-      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-      val next = cached.localCheckpoint(false)
-      val n = next.count() // materializes the checkpoint (through the cache)
-      cached.unpersist(false) // r21: the entry leaked one pass forever
-      (next, n)
-    } else {
-      val next = materialize(df, reliable)
-      // reliable checkpoints are eager by necessity; the fence there pays
-      // the explicit (cheap, cached) emptiness probe
-      (next, if (counted && next.isEmpty) 0L else 1L)
-    }
-  }
+      maxIterations: Int = 50, nonEmptyGuard: Boolean = false): DataFrame =
+    loop(initial, step, maxIterations, nonEmptyGuard, counted)(
+      (prev, _, next, _) => defaultConverged(prev, next))
 
   /** Multiset equality via two anti-joins; exact but costs a shuffle. */
   def defaultConverged(prev: DataFrame, next: DataFrame): Boolean =
     next.exceptAll(prev).isEmpty && prev.exceptAll(next).isEmpty
 
   /** Run a fixed number of passes (no convergence check) — for algorithms with
-    * a pinned iteration count (e.g. pagerank-k). `unroll` chains that many
-    * passes per materialization — same caveat as fixpointByFingerprint: only
-    * for steps that consume their input exactly once. */
+    * a pinned iteration count (e.g. pagerank-k). */
   def nTimes(initial: DataFrame, step: DataFrame => DataFrame, n: Int,
-      reliable: Boolean = false, unroll: Int = 1,
-      nonEmptyGuard: Boolean = false): DataFrame = {
-    require(unroll >= 1, s"unroll=$unroll must be >= 1")
-    require(n >= 1, s"iteration limit $n must be >= 1")
-    var current = materialize(initial, reliable)
-    val guard = nonEmptyGuard && !current.isEmpty
-    var i = 0
-    while (i < n) {
-      val k = math.min(unroll, n - i)
-      val stepped = (1 to k).foldLeft(current)((df, _) => step(df))
-      val (next, cnt) = materializeCounted(stepped, reliable, guard)
-      guardCount(cnt, guard, i)
-      current.unpersist()
-      current = next
-      i += k
-    }
-    current
-  }
+      nonEmptyGuard: Boolean = false): DataFrame =
+    loop(initial, step, n, nonEmptyGuard, counted)((_, _, _, _) => false)
 
   /** [[nTimes]] with a ZERO-extra-job early stop for steps that EMIT their
     * own change counter (r20): `changedCol` names a numeric column of the
@@ -201,71 +126,28 @@ object Iterate {
     * deterministic, so an unchanged pass makes every remaining pass a no-op
     * and the result is bit-identical to running all `n` passes (oracles
     * unaffected). The sum rides the SAME aggregate that materializes the
-    * pass (the fixpointByFingerprint trick), where [[nTimesConverged]]'s
-    * exceptAll check paid 1-2 extra shuffle jobs per pass for the same
-    * verdict. The count in that aggregate feeds the free non-empty fence. */
+    * pass, where [[nTimesConverged]]'s exceptAll check pays 1-2 extra
+    * shuffle jobs per pass for the same verdict. The count in that
+    * aggregate feeds the free non-empty fence. */
   def nTimesUntilNoChange(initial: DataFrame, step: DataFrame => DataFrame,
-      n: Int, changedCol: String, reliable: Boolean = false,
-      nonEmptyGuard: Boolean = false): DataFrame = {
-    require(n >= 1, s"iteration limit $n must be >= 1")
-    var current = materialize(initial, reliable)
-    val guard = nonEmptyGuard && !current.isEmpty
-    var i = 0
-    var done = false
-    while (i < n && !done) {
-      val stepped = step(current)
-      val rel = reliable || Materialize.reliable(stepped.sparkSession)
-      // local: lazy checkpoint mark, the aggregate materializes it (one job).
-      // reliable: eager FS checkpoint as everywhere, the aggregate then reads
-      // the (cached) materialized pass — still no shuffle re-run.
-      val cached = if (rel) null else stepped.persist(StorageLevel.MEMORY_AND_DISK)
-      val next =
-        if (rel) materialize(stepped, reliable)
-        else cached.localCheckpoint(false)
-      val r = next.agg(count(lit(1)), sum(col(changedCol))).head
-      if (cached != null) cached.unpersist(false) // r21: entry leaked per pass
-      val cnt = r.getLong(0)
-      guardCount(cnt, guard, i)
-      // a null sum (all-null changedCol with cnt > 0) means no pass reported
-      // a change — treat as converged rather than NPE (advice r20)
-      done = cnt == 0 || r.isNullAt(1) || r.getLong(1) == 0L
-      current.unpersist()
-      current = next
-      i += 1
-    }
-    current
-  }
+      n: Int, changedCol: String, nonEmptyGuard: Boolean = false): DataFrame =
+    loop(initial, step, n, nonEmptyGuard, df => {
+      val r = df.agg(count(lit(1)), sum(col(changedCol))).head
+      // a null sum (empty pass, or an all-null changedCol) means no pass
+      // reported a change — converged rather than NPE (advice r20)
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    })((_, _, _, s) => s._2 == 0L)
 
-  /** [[nTimes]] with a convergence early-stop: stops as soon as a
-    * materialized block leaves the table UNCHANGED. The step is a
-    * deterministic function of the table, so an unchanged block means every
-    * remaining pass is a no-op — the result is bit-identical to running all
-    * `n` passes (oracles unaffected), only cheaper. The unchanged check is
-    * one `exceptAll.isEmpty` job per block over the (small, key-scale)
-    * iterated table — trivia next to a move pass's edge-scale shuffles. */
+  /** [[nTimes]] with a convergence early-stop — the [[fixpoint]] rule with
+    * a pass count: stops as soon as a pass leaves the table UNCHANGED. The
+    * step is a deterministic function of the table, so an unchanged pass
+    * means every remaining pass is a no-op — the result is bit-identical to
+    * running all `n` passes (oracles unaffected), only cheaper. Both
+    * directions of the compare count: a one-directional next ⊆ prev would
+    * declare a row-DROPPING step converged. The check is one
+    * `exceptAll.isEmpty` job per pass over the (small, key-scale) iterated
+    * table — trivia next to a move pass's edge-scale shuffles. */
   def nTimesConverged(initial: DataFrame, step: DataFrame => DataFrame, n: Int,
-      reliable: Boolean = false, unroll: Int = 1,
-      nonEmptyGuard: Boolean = false): DataFrame = {
-    require(unroll >= 1, s"unroll=$unroll must be >= 1")
-    var current = materialize(initial, reliable)
-    val guard = nonEmptyGuard && !current.isEmpty
-    var i = 0
-    var done = false
-    while (i < n && !done) {
-      val k = math.min(unroll, n - i)
-      val stepped = (1 to k).foldLeft(current)((df, _) => step(df))
-      val (next, cnt) = materializeCounted(stepped, reliable, guard)
-      guardCount(cnt, guard, i)
-      // the check only buys anything if passes REMAIN — never pay the job
-      // on the final block. Both directions, like fixpoint: one-directional
-      // next⊆current would declare a row-DROPPING step "converged" and break
-      // the bit-identical-to-n-passes contract
-      done = i + k < n && next.exceptAll(current).isEmpty &&
-        current.exceptAll(next).isEmpty
-      current.unpersist()
-      current = next
-      i += k
-    }
-    current
-  }
+      nonEmptyGuard: Boolean = false): DataFrame =
+    fixpoint(initial, step, n, nonEmptyGuard)
 }

@@ -8,26 +8,38 @@ import org.apache.spark.storage.StorageLevel
   *
   * Long multi-stage pipelines (minhash signatures → band join → CC,
   * IVF/PQ training, the composed curation example) materialize fan-out
-  * frames eagerly so downstream actions never re-execute the upstream plan.
-  * `localCheckpoint` is the right default on local[*] and short jobs — no
-  * FS round-trip — but its blocks live in executor storage: on a
-  * 1000-executor cluster an executor loss AFTER truncation makes them
-  * unrecoverable and the job fails instead of recomputing, on exactly the
-  * hours-long runs where a node loss is routine. `Iterate` has carried a
-  * `reliable` escape hatch since r13; this object threads the same choice
-  * through every other eager fan-out site as a session conf, so a cluster
-  * run flips ONE setting and keeps the library call sites unchanged.
+  * frames eagerly so downstream actions never re-execute the upstream plan,
+  * and every [[Iterate]] loop truncates each pass. `localCheckpoint` is the
+  * right default on local[*] and short jobs — no FS round-trip — but its
+  * blocks live in executor storage: on a 1000-executor cluster an executor
+  * loss AFTER truncation makes them unrecoverable and the job fails instead
+  * of recomputing, on exactly the hours-long runs where a node loss is
+  * routine. This object makes that choice once, from a session conf, so a
+  * cluster run flips ONE setting and keeps the library call sites unchanged.
   */
 object Materialize {
-  /** Session conf: `true` routes every eager fan-out materialization in the
-    * library through an FS-backed `checkpoint` into the context's
-    * checkpoint dir (which must be set to a path ALL executors can reach —
-    * HDFS/S3, not a driver-local disk). Default `false` = `localCheckpoint`
-    * (executor-local blocks: fastest, not survivable past executor loss). */
+  /** Session conf: `true` routes every eager fan-out materialization and
+    * every iterate pass in the library through an FS-backed `checkpoint`
+    * into the context's checkpoint dir (which must be set to a path ALL
+    * executors can reach — HDFS/S3, not a driver-local disk). Default
+    * `false` = `localCheckpoint` (executor-local blocks: fastest, not
+    * survivable past executor loss). */
   val ReliableConf = "spark.graft.reliableCheckpoint"
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  private val warned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** The conf's value; a malformed one (`yes`, `1`) falls back to `false`
+    * with one WARN per distinct value instead of aborting every operator
+    * that materializes. */
   def reliable(spark: SparkSession): Boolean =
-    spark.conf.getOption(ReliableConf).exists(_.toBoolean)
+    spark.conf.getOption(ReliableConf).exists { v =>
+      v.toBooleanOption.getOrElse {
+        if (warned.add(v))
+          log.warn(s"$ReliableConf=$v is not true/false — using false (localCheckpoint)")
+        false
+      }
+    }
 
   /** Eagerly materialize a fan-out frame and truncate its lineage.
     * Reliable form persists first (the classic idiom — RDD checkpointing
@@ -45,4 +57,16 @@ object Materialize {
       cached.unpersist(false)
       out
     }
+
+  /** Truncate one iterate pass and compute `summary` over it in the same
+    * job. Local: a lazy `localCheckpoint` mark that the summary's action
+    * materializes as it runs. No persist goes first — the checkpoint blocks
+    * are the pass's only copy, so there is no cache entry to release (a
+    * persisted frame's entry outlives the checkpointed frame built on it).
+    * Reliable: [[eager]] first, because a lazy reliable checkpoint writes
+    * its files only on re-execution; the summary then reads the files. */
+  def pass[T](df: DataFrame)(summary: DataFrame => T): (DataFrame, T) = {
+    val out = if (reliable(df.sparkSession)) eager(df) else df.localCheckpoint(false)
+    (out, summary(out))
+  }
 }

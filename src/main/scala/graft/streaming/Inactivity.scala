@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import graft.operators.Materialize
 
 /** Processing-time utilities — reference
   * `python/pathway/stdlib/temporal/time_utils.py`: `utc_now` (:42, a
@@ -285,9 +286,11 @@ object Inactivity {
     * oldest-first) replays exactly one chunk per micro-batch, in order.
     * No event row ever crosses the driver — the install step is O(chunks)
     * rename metadata ops. Timeouts never fire: tick units are opaque to
-    * Spark's processing-time clock, and every gap is detected on data.
-    * Returns a STATIC DataFrame (instance, inactivity_ts, resumed_ts) in
-    * the input's tick units. */
+    * Spark's processing-time clock, and every gap is detected on data. The
+    * emitted periods leave the same way: a parquet file sink in the run's
+    * scratch dir, read back distributed and materialized before the dir
+    * is deleted. Returns a STATIC DataFrame (instance, inactivity_ts,
+    * resumed_ts) in the input's tick units. */
   def inactivityDetectionReplay(events: DataFrame, ts: Column, instance: Column,
       allowedTicks: Long, batchTicks: Long): DataFrame = {
     val spark = events.sparkSession
@@ -370,7 +373,7 @@ object Inactivity {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("act",
         org.apache.spark.sql.types.BooleanType)))
-    val outName = s"inact_replay_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = new HPath(base, "out").toString
     // Scale-adaptive STATE partitioning (r21, guide §2/§5): a stateful
     // streaming query fixes its state-store partition count at first batch
     // from spark.sql.shuffle.partitions — the SESSION value sized for
@@ -398,7 +401,7 @@ object Inactivity {
       catch { case scala.util.control.NonFatal(_) => () }
     }
     ss.conf.set("spark.sql.shuffle.partitions", stateParts)
-    val q = ss.readStream.schema(inSchema)
+    val periods = ss.readStream.schema(inSchema)
       .option("maxFilesPerTrigger", 1)
       .json(spool.toString)
       .select(col("i").as("instance"), lit(false).as("synthetic"),
@@ -408,25 +411,26 @@ object Inactivity {
         GroupStateTimeout.NoTimeout)(
         kernel(allowedTicks, globalFromStartOnly = false, armTimeouts = false))
       .toDF()
-      .writeStream.format("memory").queryName(outName)
+    // file sink, read back distributed: the periods never pass through the
+    // driver. The explicit schema keeps a replay with no periods readable
+    // (no data files to infer from; the sink's metadata log lists none).
+    val q = periods.writeStream.format("parquet")
+      .option("path", out)
       .option("checkpointLocation", ckpt)
       .start()
     try {
       q.processAllAvailable()
-      val rows = ss.table(outName).collect().toSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-          ss.table(outName).schema)
+      // materialized before `base` (sink output included) is deleted below
+      Materialize.eager(spark.read.schema(periods.schema).parquet(out)
         .select(col("instance").cast(instType).as("instance"),
           col("start").as("inactivity_ts"),
-          col("resumed").as("resumed_ts"))
+          col("resumed").as("resumed_ts")))
     } finally {
-      // the memory sink pins all output rows in the driver until dropped
-      // (bounded: inactivity periods, not events), and the spool/checkpoint
-      // dirs are run-local scratch — repeated replays (specs run 4 per
-      // suite) would otherwise accumulate both
+      // the spool, checkpoint and sink dirs are run-local scratch —
+      // repeated replays (specs run 4 per suite) would otherwise
+      // accumulate them
       try q.stop() finally {
         proj.unpersist(false)
-        ss.catalog.dropTempView(outName)
         try fs.delete(base, true) catch { case _: java.io.IOException => () }
       }
     }

@@ -85,6 +85,38 @@ class FaultToleranceSpec extends AnyFunSuite {
     assert(SparkTestBase.causeMessages(e).exists(_.contains("permanent fault")))
   }
 
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private lazy val cliques = {
+    val clique1 = for (i <- 1L to 5L; j <- (i + 1) to 5L) yield (i, j)
+    val clique2 = for (i <- 11L to 15L; j <- (i + 1) to 15L) yield (i, j)
+    (clique1 ++ clique2 :+ (5L, 11L)).toDF("src", "dst")
+  }
+
+  /** One graph operator per Iterate loop shape besides the fingerprint
+    * loop: louvain (moved-counter stop), pagerank (fixed passes) and
+    * louvainAuto (pairwise exceptAll stop). */
+  private def loopShapes: Seq[(String, () => DataFrame)] = {
+    import graft.operators.Graphs
+    Seq(
+      "louvain" -> (() => Graphs.louvain(cliques, iters = 4)),
+      "pagerank" -> (() => Graphs.pagerank(cliques, iters = 3)),
+      "louvainAuto" -> (() => Graphs.louvainAuto(cliques, itersPerLevel = 2)))
+  }
+
+  test("a malformed spark.graft.reliableCheckpoint falls back to local " +
+      "checkpoints instead of aborting the operator") {
+    import graft.operators.{Graphs, Materialize}
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
+    val want = sortedRows(Graphs.connectedComponents(edges))
+    spark.conf.set(Materialize.ReliableConf, "yes")
+    try {
+      assert(!Materialize.reliable(spark))
+      assert(sortedRows(Graphs.connectedComponents(edges)) == want)
+    } finally spark.conf.set(Materialize.ReliableConf, "false")
+  }
+
   test("reliable checkpoint knob (r19 judge #1): spark.graft.reliableCheckpoint" +
       "=true routes the fan-out materializations through FS-backed " +
       "checkpoints — bit-identical results, real checkpoint files on disk, " +
@@ -94,6 +126,7 @@ class FaultToleranceSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id1", "id2")
     val ccBase = Dedup.dupGroups(edges).collect().map(_.toString).sorted.toSeq
+    val loopBase = loopShapes.map { case (k, f) => k -> sortedRows(f()) }.toMap
     spark.conf.set(Materialize.ReliableConf, "true")
     try {
       if (spark.sparkContext.getCheckpointDir.isEmpty) {
@@ -113,8 +146,12 @@ class FaultToleranceSpec extends AnyFunSuite {
         .iterator().asScala.map(_.getFileName.toString).toList
       assert(files.exists(_.startsWith("part-")),
         s"expected checkpoint part files under $dir, saw $files")
-      // the Iterate family (dupGroups CC) honors the same conf
+      // every Iterate loop shape honors the same conf: fingerprint
+      // (dupGroups CC), moved counter, fixed passes, pairwise compare
       assert(Dedup.dupGroups(edges).collect().map(_.toString).sorted.toSeq == ccBase)
+      loopShapes.foreach { case (k, f) =>
+        assert(sortedRows(f()) == loopBase(k), s"$k differs under reliable checkpoints")
+      }
       // and the pipeline is still retry-stable with faults injected
       val injected = corpus.withColumn("doc_id", FaultInjection.poison(col("doc_id")))
       assert(Dedup.minhashLsh(injected, col("doc_id"), col("text"))

@@ -56,7 +56,7 @@ class PersistenceIterateFixtureSpec extends AnyFunSuite {
       files ++= in
       val init = files.toSeq.toDF("label", "val")
       val out = Iterate.nTimes(init,
-        df => df.select(col("label"), (col("val") + 1).as("val")), 3, unroll = 3)
+        df => df.select(col("label"), (col("val") + 1).as("val")), 3)
       assert(diffSet(Persistence.runStatic(state, out)) == expected)
     }
     run(Seq(("a", 10), ("b", 20), ("c", 5)), Set("a,13,1", "b,23,1", "c,8,1"))
@@ -274,7 +274,7 @@ class PersistenceIterateFixtureSpec extends AnyFunSuite {
         cur => cur.join(b, col("label") === col("_bl"))
           .select(col("label"),
             when(col("val") < 100, col("val") + col("add")).otherwise(col("val")).as("val")),
-        6, unroll = 2)
+        6)
     }
     def run(v: Seq[(String, Int)], b: Seq[(String, Int)], expected: Set[String]): Unit = {
       vals ++= v; bonus ++= b
@@ -295,7 +295,7 @@ class PersistenceIterateFixtureSpec extends AnyFunSuite {
         cur => cur.join(b, col("label") === col("_bl"))
           .select(col("label"),
             when(col("val") < 100, col("val") + col("add")).otherwise(col("val")).as("val")),
-        6, unroll = 2)
+        6)
       assert(diffSet(Persistence.runStatic(state, out)) == expected)
     }
     bonus("a") = 30
@@ -316,13 +316,13 @@ class PersistenceIterateFixtureSpec extends AnyFunSuite {
       val bonus = Iterate.nTimes(bonusRaw.toSeq.toDF("label", "add"),
         cur => cur.select(col("label"),
           when(col("add") < 50, col("add") * 2).otherwise(col("add")).as("add")),
-        4, unroll = 4).withColumnRenamed("label", "_bl")
+        4).withColumnRenamed("label", "_bl")
       // iterate 2: pointer lookup into the converged bonus
       val out = Iterate.nTimes(vals.toSeq.toDF("label", "ref", "val"),
         cur => cur.join(bonus, col("ref") === col("_bl"))
           .select(col("label"), col("ref"),
             when(col("val") < 100, col("val") + col("add")).otherwise(col("val")).as("val")),
-        4, unroll = 2).select("label", "val")
+        4).select("label", "val")
       assert(diffSet(Persistence.runStatic(state, out)) == expected)
     }
     run(Seq(("a", "x", 10)), Seq(("x", 30)), Set("a,130,1"))
@@ -343,7 +343,7 @@ class PersistenceIterateFixtureSpec extends AnyFunSuite {
         .map { case (w, xs) => Seq[Any](w, xs.size.toLong + 10L) }.toSet
       val counts = words.toSeq.toDF("word").groupBy("word").agg(count(lit(1)).as("count"))
       val out = Iterate.nTimes(counts,
-        cur => cur.select(col("word"), (col("count") + 1).as("count")), 10, unroll = 10)
+        cur => cur.select(col("word"), (col("count") + 1).as("count")), 10)
       assert(diffSet(Persistence.runStatic(state, out)) == formatDiffs(prev, expectedRows))
       prev = expectedRows
     }
@@ -373,7 +373,7 @@ class PersistenceIterateFixtureSpec extends AnyFunSuite {
       val discounted = Iterate.nTimes(sums,
         cur => cur.select(col("product"),
           when(col("total") > 50, floor(col("total") / 2)).otherwise(col("total")).as("total")),
-        8, unroll = 8)
+        8)
       val grand = discounted.agg(sum("total").as("grand"))
       assert(diffSet(Persistence.runStatic(state, grand)) == expected)
     }
