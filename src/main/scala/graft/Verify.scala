@@ -18,25 +18,9 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // dev filter: SPARK_GRAFT_ONLY=q1,q2 dumps (and lists oracle SQL for) a subset
     val selected = SparkEntry.queries.filter(kv => GraftSession.only.forall(_(kv._1)))
-    // iterate-family rows observed ONCE (r17) returning an empty frame in a
-    // fresh JVM (suspected localCheckpoint/AQE race; Iterate.nonEmptyGuard now
-    // fails such a pass loudly). These results are non-empty by construction,
-    // so an empty dump is a runtime fault: retry once with a log line.
-    val nonEmptyByConstruction = Set("iterate_cc", "bellman_ford", "pagerank",
-      "pagerank_ref", "louvain", "louvain_multilevel")
     selected.foreach { case (name, fn) =>
-      def runOnce(): Unit = GraftSession.watchdog(spark, s"verify-$name", name, timeoutS) {
+      try GraftSession.watchdog(spark, s"verify-$name", name, timeoutS) {
         fn(spark, sfDir).write.mode("overwrite").parquet(s"$outDir/$name")
-      }
-      try {
-        runOnce()
-        if (nonEmptyByConstruction(name) &&
-            spark.read.parquet(s"$outDir/$name").isEmpty) {
-          System.err.println(s"[verify] $name returned EMPTY (non-empty by " +
-            "construction) — retrying once")
-          spark.catalog.clearCache()
-          runOnce()
-        }
       } catch {
         case _: TimeoutException =>
           System.err.println(s"[verify] $name TIMEOUT after ${timeoutS}s")

@@ -86,6 +86,10 @@ object Dedup {
     * margin keeps pairs at the threshold with > 95% probability — and the
     * DuckDB oracle replicates the same prefilter, so verification is exact.
     *
+    * One plan serves every corpus size (see [[minhashCore]]): apart from the
+    * materialized signature table, every intermediate has one consumer, so
+    * no frame is recomputed and none needs a persist+count fence.
+    *
     * Returns (id, rep_id, is_dup). */
   def minhashLsh(df: DataFrame, id: Column, text: Column,
       k: Int = 5, numHashes: Int = 32, bands: Int = 8,
@@ -110,6 +114,28 @@ object Dedup {
       k: Int = 5, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.8, bucketCap: Int = DefaultBucketCap): DataFrame =
     minhashCore(df, id, text, k, numHashes, bands, threshold, bucketCap)._2
+
+  /** Calls `f` with the md5-64 hash of each DISTINCT k-gram of `n` (the
+    * short-string remainder rule of [[shingles]]). Grams are deduped BEFORE
+    * hashing: both callers (signature mins, verification sets) are
+    * idempotent under duplicates, and a string-set probe is ~10× cheaper
+    * than MD5 — on book-length docs (positions ≫ distinct grams) this
+    * bounds the expensive work by vocabulary, not document length. */
+  private def forEachGramHash(n: String, k: Int, md: java.security.MessageDigest)(
+      f: Long => Unit): Unit = {
+    val L = math.max(n.length - (k - 1), 1)
+    val seen = new java.util.HashSet[String](math.min(L, 1 << 16))
+    var i = 0
+    while (i < L) {
+      val g = n.substring(i, math.min(i + k, n.length))
+      if (seen.add(g)) {
+        md.reset()
+        val d = md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        f(java.nio.ByteBuffer.wrap(d, 0, 8).getLong)
+      }
+      i += 1
+    }
+  }
 
   /** MinHash signatures as one (id, _mins ARRAY<LONG>) row per doc. The FULL
     * signature is computed inside one mapPartitions kernel: minhash is
@@ -144,27 +170,13 @@ object Dedup {
         if (n == null) Iterator.empty
         else {
           val mins = Array.fill(mixA.length)(Long.MaxValue)
-          val L = math.max(n.length - (kk - 1), 1)
-          // dedupe grams BEFORE hashing: min is idempotent under duplicates,
-          // and a string-set probe is ~10× cheaper than MD5 + the 32-mix
-          // loop — on book-length docs (positions ≫ distinct grams) this
-          // bounds the expensive work by vocabulary, not document length
-          val seen = new java.util.HashSet[String](math.min(L, 1 << 16))
-          var i = 0
-          while (i < L) {
-            val g = n.substring(i, math.min(i + kk, n.length))
-            if (seen.add(g)) {
-              md.reset()
-              val d = md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              val gh = java.nio.ByteBuffer.wrap(d, 0, 8).getLong
-              var s = 0
-              while (s < mins.length) {
-                val m = gh * mixA(s) + mixB(s)
-                if (m < mins(s)) mins(s) = m
-                s += 1
-              }
+          forEachGramHash(n, kk, md) { gh =>
+            var s = 0
+            while (s < mins.length) {
+              val m = gh * mixA(s) + mixB(s)
+              if (m < mins(s)) mins(s) = m
+              s += 1
             }
-            i += 1
           }
           Iterator.single((docId, mins))
         }
@@ -174,7 +186,15 @@ object Dedup {
 
   /** Shared MinHash+LSH pipeline: returns (norm = (id, _n) normalized corpus,
     * dupPairs = verified (id1, id2) near-dup pairs, eagerly materialized via
-    * localCheckpoint so every intermediate cache is already released). */
+    * localCheckpoint so every intermediate cache is already released).
+    *
+    * One-consumer rule: the signature table is the one frame read by several
+    * operators (band join, hot-key probe, both prefilter joins), so it is the
+    * one persist. Downstream of it each frame feeds exactly one operator —
+    * prefiltered pairs → per-doc partner lists → the join with `norm` → the
+    * shingle kernel → the per-pair verify aggregate — so the final
+    * materialization runs each of them once and no intermediate needs a
+    * fence of its own, at any corpus size. */
   private def minhashCore(df: DataFrame, id: Column, text: Column,
       k: Int, numHashes: Int, bands: Int,
       threshold: Double, bucketCap: Int): (DataFrame, DataFrame) = {
@@ -188,36 +208,19 @@ object Dedup {
     import sess.implicits._
     val kk = k
     val sigRows = minhashSignatures(df, id, text, k, numHashes)
-    // The signature table feeds bucketing, prefilter and verification; persist
-    // AND materialize it eagerly: AQE compiles the downstream broadcast/join
-    // subqueries as parallel jobs, and without the eager count they all race
-    // to compute the not-yet-populated cache — ~20 concurrent copies of the
-    // signature pipeline (measured: 13 s → 4 s at sf0.1). ~0.5 KB/doc —
+    // The signature table feeds the band join, the hot-key probe and both
+    // prefilter joins; persist AND materialize it eagerly: AQE compiles the
+    // downstream broadcast/join subqueries as parallel jobs, and without the
+    // eager count they all race to compute the not-yet-populated cache — ~20
+    // concurrent copies of the signature pipeline (measured: 13 s → 4 s at
+    // sf0.1). ~0.5 KB/doc —
     // materializing the signature table is the standard MinHash design at any
     // scale (on a cluster it would be a checkpoint/table, same shape).
     val sig = sigRows.select(col("id") +:
         (0 until numHashes).map(s => col("_mins")(s).as(s"_h$s")): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nSigs = sig.count()
-    // Tiny-corpus LAZY mode (r21, VERDICT #3): the prefilter/candSet
-    // persist+count fences below defend EXPENSIVE subtrees against AQE's
-    // racing parallel subquery jobs — but each fence is a full local job
-    // (~0.3-0.5 s of scheduling latency), and below a few thousand docs the
-    // whole guarded subtree costs less than the fence itself (the ~300-doc
-    // curate stage inside select_and_curate paid all of them). The signature
-    // count is already on hand from the sig fence, so the branch is free.
-    // Lazy mode re-evaluates the prefilter (from the materialized sig) and
-    // the shingle kernel (from `norm`, i.e. the raw input) once per
-    // consumer — fine under minhash dedup's standing input contract that
-    // `df` is deterministic under rescan (the signature kernel and `norm`
-    // ALWAYS rescan it on separate jobs, fenced or not; a nondeterministic
-    // input was never sound here). Threshold is [[LazyFenceRows]]; at any
-    // production scale the fenced path runs unchanged.
-    val lazyFences = nSigs <= LazyFenceRows
-    var candSets: DataFrame = null
-    var prefilteredCached: DataFrame = null
+    sig.count()
     try {
-
     // band key = variadic xxhash64 over that band's signature slots (no
     // strings; a bucket key is join-internal, so Spark-only hashing is fine —
     // the oracle joins on the slot values directly)
@@ -253,89 +256,46 @@ object Dedup {
       .map(s => when(col(s"_l$s") === col(s"_r$s"), 1).otherwise(0))
       .reduce(_ + _).cast("double") / numHashes
     val estMin = math.max(0.0, threshold - 0.15)
-    // Persist + eagerly materialize the surviving pairs: this narrow (id1,
-    // id2) table is consumed by candIds (via the semi-join broadcast), and
-    // directly by the verify join — without the eager count the band-join +
-    // guard + prefilter subtree (the most expensive stages after the
-    // signature kernel) is recomputed once per consumer, tripling the
-    // operator's fixed stage overhead (measured 27 s → 9 s full-op at
-    // sf0.1). Size is bounded by the prefilter: true near-dups + margin
-    // survivors only, orders of magnitude below the corpus.
-    val prefilteredPlan = uniquePairs.join(sigL, "id1").join(sigR, "id2")
+    val prefiltered = uniquePairs.join(sigL, "id1").join(sigR, "id2")
       .filter(estJaccard >= estMin)
       .select("id1", "id2")
-    val prefiltered =
-      if (lazyFences) prefilteredPlan
-      else {
-        prefilteredCached = prefilteredPlan
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        prefilteredCached.count()
-        prefilteredCached
-      }
 
-    // verification: shingle ONLY docs that appear in some surviving pair
-    // (semi-join first), then join the small candidate set to both sides and
-    // compute exact jaccard — the expensive set build is O(candidate docs),
-    // not O(corpus). Shingle sets are DISTINCT md5-64 gram hashes (same JVM
-    // kernel as the signature grams): set-jaccard counts are invariant under
-    // the injective hash, 8-byte elements beat 5-char strings through the
-    // pair join, and the interpreted shingle HOF stays off this path.
-    val candIds = prefiltered.select(col("id1").as("id"))
-      .unionByName(prefiltered.select(col("id2").as("id"))).distinct()
-    val candSetsPlan = norm.join(candIds, Seq("id"), "left_semi")
-      .as[(Long, String)].mapPartitions { it =>
+    // verification: each doc in a surviving pair gathers its partner list,
+    // so the shingle kernel runs once per candidate doc (never per corpus
+    // doc) and its set ships once per pair. Shingle sets are DISTINCT
+    // md5-64 gram hashes (same JVM kernel as the signature grams):
+    // set-jaccard counts are invariant under the injective hash, 8-byte
+    // elements beat 5-char strings through the pair shuffle, and the
+    // interpreted shingle HOF stays off this path.
+    val partnersByDoc = prefiltered
+      .select(explode(array(col("id1"), col("id2"))).as("id"), col("id1"), col("id2"))
+      .groupBy("id").agg(collect_list(
+        when(col("id") === col("id1"), col("id2")).otherwise(col("id1"))).as("_partners"))
+    val sideSets = norm.join(partnersByDoc, "id")
+      .as[(Long, String, Seq[Long])].mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (docId, n) =>
-          if (n == null) (docId, Array.empty[Long])
-          else {
-            val L = math.max(n.length - (kk - 1), 1)
-            // string-dedupe before MD5 (same argument as the signature
-            // kernel: the hash of a distinct set only needs distinct inputs)
-            val seen = new java.util.HashSet[String](math.min(L, 1 << 16))
-            val set = scala.collection.mutable.HashSet.empty[Long]
-            var i = 0
-            while (i < L) {
-              val g = n.substring(i, math.min(i + kk, n.length))
-              if (seen.add(g)) {
-                md.reset()
-                val d = md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-                set += java.nio.ByteBuffer.wrap(d, 0, 8).getLong
-              }
-              i += 1
-            }
-            (docId, set.toArray)
-          }
+        it.flatMap { case (docId, n, partners) =>
+          val set = scala.collection.mutable.HashSet.empty[Long]
+          if (n != null) forEachGramHash(n, kk, md)(set += _)
+          val sh = set.toArray
+          partners.iterator.map(p => (math.min(docId, p), math.max(docId, p), docId, sh))
         }
-      }.toDF("id", "_sh")
-    // Eager materialize (fenced mode only): candSets is joined twice below
-    // (id1/id2 sides), and AQE's parallel subquery jobs otherwise race to
-    // fill the unpopulated cache, running the shingle kernel (+ its
-    // semi-join input) twice. Lazy mode just recomputes the tiny kernel.
-    val cs =
-      if (lazyFences) candSetsPlan
-      else {
-        candSets = candSetsPlan
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        candSets.count()
-        candSets
-      }
+      }.toDF("id1", "id2", "id", "_sh")
+    // each side's set comes from its own id, never from arrival order: a
+    // pair gets exactly one row per side, so max() picks that row's set.
     // Materialize the verified pairs (small: true near-dups only) so the
-    // signature/shingle caches can be released in finally — repeated
-    // same-session calls no longer leak a cache entry per invocation.
-    // localCheckpoint truncates lineage; its blocks are ContextCleaner-
-    // managed once the frame is unreachable, unlike persist entries.
-    val dupPairs = Materialize.eager(prefiltered
-      .join(cs.select(col("id").as("id1"), col("_sh").as("_sh1")), Seq("id1"))
-      .join(cs.select(col("id").as("id2"), col("_sh").as("_sh2")), Seq("id2"))
+    // signature cache can be released in finally and repeated same-session
+    // calls leave no cache entry behind. localCheckpoint truncates lineage;
+    // its blocks are ContextCleaner-managed once the frame is unreachable,
+    // unlike persist entries.
+    val dupPairs = Materialize.eager(sideSets.groupBy("id1", "id2")
+      .agg(max(when(col("id") === col("id1"), col("_sh"))).as("_sh1"),
+        max(when(col("id") === col("id2"), col("_sh"))).as("_sh2"))
       .filter(jaccard(col("_sh1"), col("_sh2")) >= threshold)
       .select("id1", "id2"))
 
     (norm, dupPairs)
-    } finally {
-      sig.unpersist(false)
-      if (prefilteredCached != null) prefilteredCached.unpersist(false)
-      if (candSets != null) candSets.unpersist(false)
-    }
+    } finally sig.unpersist(false)
   }
 
   /** Full transitive closure over verified near-dup pairs: a~b and b~c put
@@ -522,17 +482,6 @@ object Dedup {
     * measures ≤ a few hundred) never trip it, small enough that one
     * boilerplate key can't go quadratic at corpus scale. */
   val DefaultBucketCap: Int = 4096
-
-  /** Corpora at or below this many docs run [[minhashCore]] WITHOUT the
-    * prefilter/candSet persist+count fences (r21). The fences
-    * exist to stop AQE's parallel subquery jobs from racing an expensive
-    * unpopulated cache (r17: 13→4 s / 27→9 s at sf0.1) — below a few
-    * thousand docs the whole guarded subtree is cheaper than one fence
-    * job's local scheduling latency, so lazy duplicate recompute wins. The
-    * signature table's own persist+count stays (it supplies this count for
-    * free); results are identical either way — the branch changes
-    * materialization, not the plan's semantics. */
-  val LazyFenceRows: Long = 2000L
 
   /** Shared hot-bucket-guarded band self-join for the whole LSH family
     * (minhashLsh, [[hash64DupPairs]], Similarity.embeddingDupPairs).

@@ -104,12 +104,15 @@ object Graphs {
     * neighbors (ties → smallest label, deterministic); `iters` fixed passes. */
   def labelPropagation(edges: DataFrame, iters: Int = 5,
       src: String = "src", dst: String = "dst"): DataFrame = {
+    // loop-invariant symmetric edge list, cached as in connectedComponents:
+    // pass 0's materialization populates it, later passes read it
     val sym = edges.select(col(src).as("u"), col(dst).as("v"))
       .unionByName(edges.select(col(dst).as("u"), col(src).as("v")))
       .distinct()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val vertices = sym.select(col("u").as("vertex")).distinct()
     val initial = vertices.select(col("vertex"), col("vertex").as("label"))
-    Iterate.nTimes(initial, labels => {
+    val out = Iterate.nTimes(initial, labels => {
       val neighborLabels = sym.join(labels, sym("v") === labels("vertex"))
         .select(col("u").as("vertex"), col("label"))
       val counted = neighborLabels.groupBy("vertex", "label").agg(count(lit(1)).as("_n"))
@@ -118,6 +121,9 @@ object Graphs {
       counted.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
         .select(col("vertex"), col("label"))
     }, iters, nonEmptyGuard = true)
+    // every pass is checkpointed, so the result no longer reads the cache
+    sym.unpersist(false)
+    out
   }
 
   /** Louvain-style community detection: synchronous modularity-gain moves

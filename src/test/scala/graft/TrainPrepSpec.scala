@@ -10,14 +10,16 @@ class TrainPrepSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  test("hot-bucket guard: degenerate buckets emit star candidates, groups survive") {
-    import graft.operators.Dedup
-    // 40 identical docs (one giant bucket in every band) + 2 distinct docs;
-    // cap=10 forces the hot path on the pileup
-    val docs = ((1L to 40L).map(i => (i, "the same boilerplate text repeated everywhere")) ++
+  // 40 identical docs (one giant bucket in every band) + 2 distinct docs;
+  // cap=10 forces the hot path on the pileup
+  private lazy val cloneDocs =
+    ((1L to 40L).map(i => (i, "the same boilerplate text repeated everywhere")) ++
       Seq((100L, "a completely different document about spark"),
           (101L, "yet another unrelated piece of writing here"))).toDF("doc_id", "text")
-    val guarded = Dedup.minhashLsh(docs, col("doc_id"), col("text"), bucketCap = 10)
+
+  test("hot-bucket guard: degenerate buckets emit star candidates, groups survive") {
+    import graft.operators.Dedup
+    val guarded = Dedup.minhashLsh(cloneDocs, col("doc_id"), col("text"), bucketCap = 10)
       .as[(Long, Long, Boolean)].collect().toSeq.sortBy(_._1)
     // every clone still resolves to rep 1 through the star candidates
     assert(guarded.filter(_._1 <= 40).forall { case (id, rep, dup) =>
@@ -75,38 +77,21 @@ class TrainPrepSpec extends AnyFunSuite {
       (30L, 10L, true, 3L), (40L, 40L, false, 1L)))
   }
 
-  test("minhashLsh: the fenced path (> LazyFenceRows docs) finds the lazy path's pairs, no more") {
+  test("minhashLsh: a 2,134-doc corpus finds the 34-doc corpus's pairs, no more") {
     import graft.operators.Dedup
-    // 6 planted near-dup families of 4 (a shared random base + a short
-    // per-member tail, jaccard ~0.9) plus 10 unrelated singletons
-    val rnd = new scala.util.Random(21)
-    def words(n: Int) = Seq.fill(n)(rnd.alphanumeric.take(6).mkString.toLowerCase).mkString(" ")
-    val families = (0 until 6).flatMap { f =>
-      val base = words(14)
-      (0 until 4).map(m => (100L * f + m, s"$base ${words(1)}"))
-    }
-    val singletons = (0 until 10).map(i => (1000L + i, words(14)))
-    val small = (families ++ singletons).toDF("doc_id", "text")
-    // filler whose tokens are all unique (hex digests of distinct ids) lifts
-    // the corpus past the lazy-fence threshold
-    val filler = spark.range(2100).select((col("id") + 1000000L).as("doc_id"),
-      concat_ws(" ", sha2(col("id").cast("string"), 256), md5(col("id").cast("string")))
-        .as("text"))
-    val big = small.unionByName(filler)
-    assert(small.count() <= Dedup.LazyFenceRows && big.count() > Dedup.LazyFenceRows)
+    val small = MinhashCorpus.small(spark)
+    val big = MinhashCorpus.big(spark)
+    assert(small.count() == 34L && big.count() == 2134L)
 
     def run(docs: org.apache.spark.sql.DataFrame): Set[(Long, Long, Boolean)] =
       Dedup.minhashLsh(docs, col("doc_id"), col("text"))
         .as[(Long, Long, Boolean)].collect().toSet
-    val lazyOut = run(small)
+    val smallOut = run(small)
     // every family member resolves to its family's smallest id
-    assert(lazyOut == (families ++ singletons).map { case (id, _) =>
-      val rep = if (id < 1000L) id - id % 100 else id
-      (id, rep, rep != id)
-    }.toSet)
-    val fencedOut = run(big)
-    assert(fencedOut.filter(_._1 < 1000000L) == lazyOut)
-    assert(fencedOut.filter(_._1 >= 1000000L).forall { case (id, rep, dup) => rep == id && !dup })
+    assert(smallOut == MinhashCorpus.expected)
+    val bigOut = run(big)
+    assert(bigOut.filter(_._1 < 1000000L) == smallOut)
+    assert(bigOut.filter(_._1 >= 1000000L).forall { case (id, rep, dup) => rep == id && !dup })
   }
 
   test("hot-bucket guard: embedding SRP pileup emits star candidates, pairs verify") {
@@ -819,6 +804,37 @@ class TrainPrepSpec extends AnyFunSuite {
       import scala.jdk.CollectionConverters._
       assert(rec.asScala.exists { case (hot, mx) => hot == 1L && mx == 30L },
         s"expected a (1, 30) hot-bucket observation, got ${rec.asScala.toList}")
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("guard observability: full minhashLsh over a 40-clone pileup surfaces " +
+      "exactly one hot-bucket observation") {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.execution.QueryExecution
+    val marker = "guard_flush_marker"
+    val rec = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        Dedup.guardObservations(qe).foreach { case (_, row) =>
+          rec.add((row.getAs[Long]("hot_buckets"), row.getAs[Long]("max_bucket_rows")))
+        }
+        if (qe.analyzed.output.exists(_.name == marker)) flushed.countDown()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      // the pileup fills one bucket in each of the 8 bands: all 8 are hot
+      Dedup.minhashLsh(cloneDocs, col("doc_id"), col("text"), bucketCap = 10).collect()
+      // listener events arrive in order: the marker query's callback
+      // follows every callback of the operator's queries
+      spark.range(1).select(lit(1).as(marker)).collect()
+      assert(flushed.await(15, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker query")
+      import scala.jdk.CollectionConverters._
+      assert(rec.asScala.toList == List((8L, 40L)),
+        s"expected one (8, 40) hot-bucket observation, got ${rec.asScala.toList}")
     } finally spark.listenerManager.unregister(l)
   }
 }
