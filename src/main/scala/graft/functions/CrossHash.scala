@@ -52,13 +52,17 @@ object CrossHash {
       rnd.nextLong() & 0x3FFFFFFFFFFFFFFFL))
   }
 
-  /** Driver/executor-JVM twin of [[md5Long]] (for stubs like FakeEmbedder that
-    * hash inside mapPartitions rather than in a SQL expression). */
+  /** Driver/executor-JVM twin of [[md5Long]], for the per-gram and per-token
+    * kernels that hash inside mapPartitions or an Aggregator rather than in a
+    * SQL expression. Each thread reuses one digest: `getInstance` is a
+    * provider lookup plus an allocation, too dear to pay per token. */
   def md5LongJvm(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val d = jvmMd5.get().digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     java.nio.ByteBuffer.wrap(d, 0, 8).getLong
   }
+
+  private val jvmMd5 =
+    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
 
   // ── DuckDB SQL snippet builders (oracle side) ──────────────────────────────
 

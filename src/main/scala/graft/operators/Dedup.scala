@@ -121,18 +121,13 @@ object Dedup {
     * idempotent under duplicates, and a string-set probe is ~10× cheaper
     * than MD5 — on book-length docs (positions ≫ distinct grams) this
     * bounds the expensive work by vocabulary, not document length. */
-  private def forEachGramHash(n: String, k: Int, md: java.security.MessageDigest)(
-      f: Long => Unit): Unit = {
+  private def forEachGramHash(n: String, k: Int)(f: Long => Unit): Unit = {
     val L = math.max(n.length - (k - 1), 1)
     val seen = new java.util.HashSet[String](math.min(L, 1 << 16))
     var i = 0
     while (i < L) {
       val g = n.substring(i, math.min(i + k, n.length))
-      if (seen.add(g)) {
-        md.reset()
-        val d = md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        f(java.nio.ByteBuffer.wrap(d, 0, 8).getLong)
-      }
+      if (seen.add(g)) f(CrossHash.md5LongJvm(g))
       i += 1
     }
   }
@@ -165,12 +160,11 @@ object Dedup {
     val mixA = Array.tabulate(numHashes)(s => CrossHash.mixers(s)._1)
     val mixB = Array.tabulate(numHashes)(s => CrossHash.mixers(s)._2)
     norm.as[(Long, String)].mapPartitions { it =>
-      val md = java.security.MessageDigest.getInstance("MD5")
       it.flatMap { case (docId, n) =>
         if (n == null) Iterator.empty
         else {
           val mins = Array.fill(mixA.length)(Long.MaxValue)
-          forEachGramHash(n, kk, md) { gh =>
+          forEachGramHash(n, kk) { gh =>
             var s = 0
             while (s < mins.length) {
               val m = gh * mixA(s) + mixB(s)
@@ -273,10 +267,9 @@ object Dedup {
         when(col("id") === col("id1"), col("id2")).otherwise(col("id1"))).as("_partners"))
     val sideSets = norm.join(partnersByDoc, "id")
       .as[(Long, String, Seq[Long])].mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (docId, n, partners) =>
           val set = scala.collection.mutable.HashSet.empty[Long]
-          if (n != null) forEachGramHash(n, kk, md)(set += _)
+          if (n != null) forEachGramHash(n, kk)(set += _)
           val sh = set.toArray
           partners.iterator.map(p => (math.min(docId, p), math.max(docId, p), docId, sh))
         }
@@ -435,7 +428,6 @@ object Dedup {
     import sess.implicits._
     df.select(id.cast("long").as("id"), TextOps.wordTokens(text).as("_toks"))
       .as[(Long, Seq[String])].mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (docId, toks) =>
           if (toks == null || toks.isEmpty) Iterator.empty
           else {
@@ -447,9 +439,7 @@ object Dedup {
             val freq = new java.util.HashMap[String, Long](1 << 10)
             toks.foreach(t => freq.merge(t, 1L, _ + _))
             freq.forEach { (t, cnt) =>
-              md.reset()
-              val d = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              val h = java.nio.ByteBuffer.wrap(d, 0, 8).getLong
+              val h = CrossHash.md5LongJvm(t)
               var i = 0
               while (i < 64) {
                 if (((h >>> (63 - i)) & 1L) == 1L) counts(i) += cnt else counts(i) -= cnt

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions.CrossHash
 
 /** Training-data preparation operators (builder-prompt first-class surface):
@@ -118,14 +119,10 @@ object TrainPrep {
     val toks = filter(split(lower(text), "\\s+"), x => x =!= "")
     df.select(id.cast("long").as("id"), toks.as("_ts"))
       .as[(Long, Seq[String])].mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (docId, ts) =>
           val n = if (ts == null) 0 else ts.length
           (0 to n - k).iterator.map { i =>
-            val g = ts.slice(i, i + k).mkString(" ")
-            md.reset()
-            val d = md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            (docId, i + 1, java.nio.ByteBuffer.wrap(d, 0, 8).getLong)
+            (docId, i + 1, CrossHash.md5LongJvm(ts.slice(i, i + k).mkString(" ")))
           }
         }
       }.toDF("id", "pos", "_h")
@@ -387,7 +384,7 @@ object TrainPrep {
   // (or gumbel-resample). The standard public data-selection recipe for
   // pre-training mixture construction.
   //
-  // 100 TB shape: one explode+count per corpus with map-side combine, a
+  // 100 TB shape: one per-doc gram-count kernel per corpus (no shuffle), a
   // `buckets`-row ratio table broadcast onto the per-doc counts, and ONE
   // groupBy(id) shuffle. Never corpus x corpus; the only driver scalars are
   // the two corpus gram totals (same two-pass contract as any TF-IDF build,
@@ -406,23 +403,54 @@ object TrainPrep {
   def whitespaceWordCount(text: Column): Column =
     size(whitespaceTokens(text)).cast("long")
 
-  /** Per-doc hashed n-gram bucket counts: (id, bucket, cnt). Tokens are
-    * nonempty whitespace runs of the lowercased text (the oracle-pinned
-    * shape); grams are tokens plus adjacent-pair bigrams; `buckets` must be
-    * a power of two so the oracle's unsigned `% buckets` equals this signed
-    * `pmod` bit-for-bit (same requirement as LinearModel's feature hash). */
+  /** Per-doc hashed n-gram bucket counts: (id, bucket, cnt), one row per
+    * (doc, bucket) the doc's grams hit. Tokens are nonempty whitespace runs
+    * of the lowercased text ([[whitespaceTokens]], the oracle-pinned shape,
+    * still tokenized in Catalyst); grams are tokens plus adjacent-pair
+    * bigrams ("a b"); bucket = md5-64(gram) & (buckets − 1). `buckets` must
+    * be a power of two so the oracle's unsigned `% buckets` equals this
+    * mask bit-for-bit (same requirement as LinearModel's feature hash).
+    *
+    * One mapPartitions kernel, the `Dedup.simhashSignatures` shape: counts
+    * are per-doc-local, so the kernel counts each distinct gram in a per-doc
+    * map, MD5s each distinct gram once and sums the counts per bucket. An
+    * explode would encode a Tungsten row per gram occurrence, hash it
+    * through md5Long's hex-string expression and shuffle on (id, bucket),
+    * all for counts that never leave their doc. Null and token-less text
+    * emit no row.
+    *
+    * A doc is one input row: two rows sharing an id emit one row set each,
+    * not a merged one. Every consumer here sums cnt linearly (per bucket in
+    * [[dsirLogRatios]], per id in [[dsirScore]]), so their output is the
+    * same either way; sum by (id, bucket) to merge. */
   def hashedNgramCounts(df: DataFrame, id: Column, text: Column,
       buckets: Int): DataFrame = {
     require(buckets > 0 && (buckets & (buckets - 1)) == 0,
       s"buckets=$buckets must be a power of two")
-    val toks = whitespaceTokens(text)
-    val bigrams = when(size(toks) >= 2,
-      zip_with(slice(toks, lit(1), size(toks) - 1),
-        slice(toks, lit(2), size(toks) - 1),
-        (a, b) => concat(a, lit(" "), b))).otherwise(array())
-    df.select(id.as("id"), explode(concat(toks, bigrams)).as("gram"))
-      .select(col("id"), pmod(CrossHash.md5Long(col("gram")), lit(buckets.toLong)).as("bucket"))
-      .groupBy("id", "bucket").agg(count(lit(1)).as("cnt"))
+    val in = df.select(id.as("id"), whitespaceTokens(text).as("_toks"))
+    val outSchema = StructType(Seq(in.schema("id"),
+      StructField("bucket", LongType, nullable = false),
+      StructField("cnt", LongType, nullable = false)))
+    val mask = buckets - 1L
+    in.mapPartitions { it =>
+      it.flatMap { r =>
+        val grams = new java.util.HashMap[String, Long]()
+        if (!r.isNullAt(1)) {
+          var prev: String = null
+          r.getSeq[String](1).foreach { t =>
+            grams.merge(t, 1L, _ + _)
+            if (prev != null) grams.merge(prev + " " + t, 1L, _ + _)
+            prev = t
+          }
+        }
+        val perBucket = new java.util.HashMap[Long, Long]()
+        grams.forEach((g, c) => perBucket.merge(CrossHash.md5LongJvm(g) & mask, c, _ + _))
+        val docId = r.get(0)
+        val out = new scala.collection.mutable.ArrayBuffer[Row](perBucket.size)
+        perBucket.forEach((b, c) => out += Row(docId, b, c))
+        out.iterator
+      }
+    }(Encoders.row(outSchema))
   }
 
   /** Laplace-smoothed log importance ratios per hash bucket, in integer
@@ -466,7 +494,11 @@ object TrainPrep {
     * persisted reruns a grown corpus re-scores only its new docs' grams and
     * every retained doc keeps a bit-identical weight, so the changelog is
     * the true diff (recomputing ratios per run shifts every weight — full
-    * churn). */
+    * churn).
+    *
+    * Plan: the [[hashedNgramCounts]] kernel's sparse per-doc rows meet the
+    * broadcast ratio table in the same stage, so the groupBy(id) is the
+    * one shuffle. Rows that share an id sum into one weight. */
   def dsirScore(raw: DataFrame, ratios: DataFrame, id: Column, text: Column,
       buckets: Int = 8192): DataFrame =
     hashedNgramCounts(raw, id, text, buckets)

@@ -144,4 +144,11 @@ class CacheHygieneSpec extends AnyFunSuite {
         threshold = 0.95)
     }
   }
+
+  test("dsirSelect leaves no cache entry") {
+    assertNoResidue("dsirSelect") {
+      TrainPrep.dsirSelect(docs, docs.filter(col("doc_id") % 7 === 0),
+        col("doc_id"), col("text"), buckets = 64, k = 10)
+    }
+  }
 }

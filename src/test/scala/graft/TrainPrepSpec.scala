@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.CrossHash
 import graft.operators.TrainPrep
 
 /** TrainPrep: substring-span dedup, decontamination, weighted sampling —
@@ -768,6 +770,70 @@ class TrainPrepSpec extends AnyFunSuite {
       s"exactly the displaced three retract: $dels")
     // retained docs kept bit-identical weights -> zero churn beyond the diff
     assert(changes.length == 6)
+  }
+
+  /** The explode + Catalyst md5Long + groupBy(id, bucket) form that the
+    * hashedNgramCounts kernel replaced: the equivalence reference. */
+  private def explodedNgramCounts(df: DataFrame, id: Column, text: Column,
+      buckets: Int): DataFrame = {
+    val toks = TrainPrep.whitespaceTokens(text)
+    val bigrams = when(size(toks) >= 2,
+      zip_with(slice(toks, lit(1), size(toks) - 1),
+        slice(toks, lit(2), size(toks) - 1),
+        (a, b) => concat(a, lit(" "), b))).otherwise(array())
+    df.select(id.as("id"), explode(concat(toks, bigrams)).as("gram"))
+      .select(col("id"), pmod(CrossHash.md5Long(col("gram")), lit(buckets.toLong)).as("bucket"))
+      .groupBy("id", "bucket").agg(count(lit(1)).as("cnt"))
+  }
+
+  // a 20k-token skewed doc (cubed uniform → a few head words carry most
+  // occurrences), blank and whitespace-run texts, one token, non-ASCII
+  // capitals, and doc_id 8 on two rows; `row` is a unique per-row key
+  private lazy val gramCorpus = {
+    val rnd = new scala.util.Random(7)
+    val skewed = Seq.fill(20000)(s"w${(math.pow(rnd.nextDouble(), 3) * 300).toInt}").mkString(" ")
+    Seq[(Long, String)]((1L, skewed), (2L, null), (3L, ""), (4L, "   "),
+      (5L, "\t\n a\t\tb\n\nc \t\n d \n"), (6L, "solitary"),
+      (7L, "ÉCOLE Straße İSTANBUL ΣΟΦΟΣ"),
+      (8L, "the quick brown fox"), (8L, "the lazy dog the end"))
+      .toDF("doc_id", "text").withColumn("row", monotonically_increasing_id())
+  }
+
+  private def countRows(df: DataFrame): Seq[(Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+
+  test("hashedNgramCounts: per-doc kernel == the explode+md5Long+groupBy form") {
+    val buckets = 64
+    def kernel(id: Column) = TrainPrep.hashedNgramCounts(gramCorpus, id, col("text"), buckets)
+    def reference(id: Column) = explodedNgramCounts(gramCorpus, id, col("text"), buckets)
+    // doc by doc (unique row key): the same (id, bucket, cnt) multiset
+    val perRow = countRows(kernel(col("row")))
+    assert(perRow == countRows(reference(col("row"))))
+    assert(kernel(col("doc_id")).schema.map(_.dataType) ==
+      reference(col("doc_id")).schema.map(_.dataType))
+    // the 20k-token doc sums to 20,000 unigrams + 19,999 bigrams; blank,
+    // null and whitespace-only texts emit nothing
+    val docOfRow = gramCorpus.select("row", "doc_id").as[(Long, Long)].collect().toMap
+    val gramsPerDoc = perRow.groupBy(t => docOfRow(t._1)).map { case (d, ts) => d -> ts.map(_._3).sum }
+    assert(gramsPerDoc(1L) == 39999L)
+    assert(gramsPerDoc(5L) == 7L && gramsPerDoc(6L) == 1L && gramsPerDoc(7L) == 7L)
+    assert(Seq(2L, 3L, 4L).forall(d => !gramsPerDoc.contains(d)))
+    // a repeated id keeps one row set per doc; summing by (id, bucket)
+    // gives the reference's merged rows
+    val byId = kernel(col("doc_id"))
+    val twoDocRows = perRow.count(t => docOfRow(t._1) == 8L)
+    assert(byId.filter(col("id") === 8L).count() == twoDocRows)
+    assert(countRows(byId.groupBy("id", "bucket").agg(sum("cnt").as("cnt"))) ==
+      countRows(reference(col("doc_id"))))
+  }
+
+  test("dsirWeights on the gram-count corpus: the explode-form weights, repeated id merged") {
+    val target = gramCorpus.filter(col("doc_id") >= 5L)
+    val w = TrainPrep.dsirWeights(gramCorpus, target, col("doc_id"), col("text"), 64)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    info(s"weights: ${w.toSeq.sorted.mkString(", ")}")
+    assert(w == Map(1L -> -8818312385L, 5L -> 6389402L, 6L -> 1126951L,
+      7L -> 4963653L, 8L -> 8643365L))
   }
 
   test("dsirResample: deterministic gumbel keys, biased toward target lookalikes") {
