@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Keys, PwTable}
-import graft.operators.{Clustering, Dedup, DocParse, Graphs, Hnsw, Multimodal, Similarity, Temporal, TextOps, TrainPrep, Utils}
+import graft.operators.{Clustering, Dedup, DocParse, Graphs, Hnsw, Materialize, Multimodal, Similarity, Temporal, TextOps, TrainPrep, Utils}
 import graft.sources.Tables
 import graft.functions.{Exprs, Reducers}
 import graft.functions.Exprs._
@@ -1058,13 +1058,11 @@ object SparkEntry {
   }
 
   private def qDedupNgramJaccard(s: SparkSession, dir: String): DataFrame = {
-    // persist + materialize the shingled projection (kernel form — the HOF
-    // chain is interpreted): without the eager cache BOTH join sides re-run
-    // the shingling over the full corpus
-    val d = Dedup.shingleSets(docs(s, dir), col("doc_id"), col("text"), 3)
-      .withColumnRenamed("id", "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    d.count()
+    // materialize the shingled projection (kernel form — the HOF chain is
+    // interpreted): without the checkpoint BOTH join sides re-run the
+    // shingling over the full corpus
+    val d = Materialize.eager(Dedup.shingleSets(docs(s, dir), col("doc_id"), col("text"), 3)
+      .withColumnRenamed("id", "doc_id"))
     val l = d.select(col("doc_id").as("id1"), col("sh").as("sh1"))
     val r = d.select(col("doc_id").as("id2"), col("sh").as("sh2"))
     l.join(r, col("id2") === col("id1") + 1)

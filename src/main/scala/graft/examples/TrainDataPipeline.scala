@@ -129,28 +129,23 @@ object TrainDataPipeline {
     * window offsets derive from the ACTUAL id-array sizes, so the output is
     * internally consistent whatever the curation-time token estimate was. */
   def curateToTokenWindows(docs: DataFrame, evalSet: DataFrame,
-      budget: Long = 2048, nMerges: Int = 200): DataFrame = {
+      budget: Long = 2048, nMerges: Int = 200): DataFrame = Materialize.scoped { pin =>
     // curated feeds four consumers (word counts ×1 shared, encodeIds, the
     // final join) — materialize it ONCE, and share one word-count pass
     // between train and baseSymbols, per the eager-persist discipline
-    val curated = curate(docs, evalSet, budget, bpeMerges = Some(nMerges)).persist()
-    try {
-      curated.count()
-      val wc = Bpe.wordCounts(curated, col("text")).persist()
-      val (merges, vocab) =
-        try {
-          val m = Bpe.trainFromCounts(wc, nMerges)
-          (m, Bpe.vocabulary(m, Bpe.baseSymbolsFromCounts(wc)))
-        } finally wc.unpersist(false)
-      val ids = Bpe.encodeIds(curated, col("doc_id"), col("text"), merges, vocab)
-        .select(col("id").as("doc_id"), col("token_ids"))
-      Materialize.eager(TrainPrep.packTokenWindows(
-        curated.select(col("doc_id"), col("_shard")).join(ids, "doc_id"),
-        instance = col("_shard"), order = col("doc_id"),
-        tokenIds = col("token_ids"), budget = budget))
-        // (materialized before releasing curated: the packed frame's plan
-        // still references it)
-    } finally curated.unpersist(false)
+    val curated = pin(curate(docs, evalSet, budget, bpeMerges = Some(nMerges)))
+    curated.count()
+    val wc = pin(Bpe.wordCounts(curated, col("text")))
+    val merges = Bpe.trainFromCounts(wc, nMerges)
+    val vocab = Bpe.vocabulary(merges, Bpe.baseSymbolsFromCounts(wc))
+    val ids = Bpe.encodeIds(curated, col("doc_id"), col("text"), merges, vocab)
+      .select(col("id").as("doc_id"), col("token_ids"))
+    // materialized before the scope releases curated: the packed frame's
+    // plan still references it
+    Materialize.eager(TrainPrep.packTokenWindows(
+      curated.select(col("doc_id"), col("_shard")).join(ids, "doc_id"),
+      instance = col("_shard"), order = col("doc_id"),
+      tokenIds = col("token_ids"), budget = budget))
   }
 
   /** Targeted selection ahead of curation: DSIR importance ranking toward a

@@ -111,14 +111,13 @@ object Clustering {
     * (ties → smaller label).
     *
     * The returned assignment is MATERIALIZED (localCheckpoint — one narrow
-    * (id, label) row per point), and the internal bucketed-corpus cache is
-    * released before returning (r21): the old shape left the nTables×-wider
-    * bucket table persisted for the session's lifetime, and every consumer
-    * (semanticDedup's per-cluster self-join, diversitySample's two
-    * capPerGroup scans, the clustering_lsh row) re-ran the vote/window plan
-    * per scan. */
+    * (id, label) row per point), so the scope releases the nTables×-wider
+    * bucketed-corpus pin (r21) and no consumer (semanticDedup's per-cluster
+    * self-join, diversitySample's two capPerGroup scans, the clustering_lsh
+    * row) re-runs the vote/window plan per scan. */
   def viaLsh(points: DataFrame, id: Column, vec: Column, dim: Int, k: Int,
-      nPlanes: Int = 4, nTables: Int = 4, lloydIters: Int = 2): DataFrame = {
+      nPlanes: Int = 4, nTables: Int = 4, lloydIters: Int = 2): DataFrame =
+    Materialize.scoped { pin =>
     // Quantize + all nTables bucket strings in ONE mapPartitions kernel:
     // expression HOFs (aggregate/zip_with) are CodegenFallback-interpreted
     // (same lesson as the minhash gram kernel, SURVEY §8), and nTables
@@ -129,7 +128,7 @@ object Clustering {
     import sess.implicits._
     val planes: Array[Array[Array[Double]]] = Array.tabulate(nTables)(t =>
       Similarity.srpPlanes(t, nPlanes, dim).map(_.toArray).toArray)
-    val b = points.select(id.cast("long").as("pid"),
+    val b = pin(points.select(id.cast("long").as("pid"),
         vec.cast("array<double>").as("_v"))
       .as[(Long, Seq[Double])].mapPartitions { it =>
         it.flatMap { case (pid, v) =>
@@ -148,8 +147,7 @@ object Clustering {
             (pid, qv.toSeq, t, sb.toString)
           }
         }
-      }.toDF("pid", "_qv", "_table", "_bucket")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.toDF("pid", "_qv", "_table", "_bucket"))
 
     // representative per (table, bucket): component sums — exact, and they
     // already encode the member count (the reference's sample_weight: the
@@ -232,9 +230,8 @@ object Clustering {
       .join(broadcast(labels), Seq("_table", "_bucket"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("pid")).orderBy(col("_cnt").desc, col("_label").asc)
-    try Materialize.eager(votes.groupBy("pid", "_label").agg(count(lit(1)).as("_cnt"))
+    Materialize.eager(votes.groupBy("pid", "_label").agg(count(lit(1)).as("_cnt"))
       .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
       .select(col("pid").as("id"), col("_label").as("label")))
-    finally b.unpersist(false)
   }
 }

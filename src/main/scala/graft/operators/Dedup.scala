@@ -191,7 +191,7 @@ object Dedup {
     * fence of its own, at any corpus size. */
   private def minhashCore(df: DataFrame, id: Column, text: Column,
       k: Int, numHashes: Int, bands: Int,
-      threshold: Double, bucketCap: Int): (DataFrame, DataFrame) = {
+      threshold: Double, bucketCap: Int): (DataFrame, DataFrame) = Materialize.scoped { pin =>
     require(numHashes % bands == 0, s"numHashes=$numHashes must divide into bands=$bands")
     require(numHashes <= CrossHash.mixers.length,
       s"numHashes=$numHashes exceeds the ${CrossHash.mixers.length} pregenerated mix constants")
@@ -203,18 +203,13 @@ object Dedup {
     val kk = k
     val sigRows = minhashSignatures(df, id, text, k, numHashes)
     // The signature table feeds the band join, the hot-key probe and both
-    // prefilter joins; persist AND materialize it eagerly: AQE compiles the
-    // downstream broadcast/join subqueries as parallel jobs, and without the
-    // eager count they all race to compute the not-yet-populated cache — ~20
-    // concurrent copies of the signature pipeline (measured: 13 s → 4 s at
-    // sf0.1). ~0.5 KB/doc —
-    // materializing the signature table is the standard MinHash design at any
-    // scale (on a cluster it would be a checkpoint/table, same shape).
-    val sig = sigRows.select(col("id") +:
-        (0 until numHashes).map(s => col("_mins")(s).as(s"_h$s")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // prefilter joins: pinned and counted first (the AQE cache race, see
+    // Materialize.scoped). ~0.5 KB/doc — materializing the signature table
+    // is the standard MinHash design at any scale (on a cluster it would be
+    // a checkpoint/table, same shape).
+    val sig = pin(sigRows.select(col("id") +:
+        (0 until numHashes).map(s => col("_mins")(s).as(s"_h$s")): _*))
     sig.count()
-    try {
     // band key = variadic xxhash64 over that band's signature slots (no
     // strings; a bucket key is join-internal, so Spark-only hashing is fine —
     // the oracle joins on the slot values directly)
@@ -276,11 +271,8 @@ object Dedup {
       }.toDF("id1", "id2", "id", "_sh")
     // each side's set comes from its own id, never from arrival order: a
     // pair gets exactly one row per side, so max() picks that row's set.
-    // Materialize the verified pairs (small: true near-dups only) so the
-    // signature cache can be released in finally and repeated same-session
-    // calls leave no cache entry behind. localCheckpoint truncates lineage;
-    // its blocks are ContextCleaner-managed once the frame is unreachable,
-    // unlike persist entries.
+    // the verified pairs (small: true near-dups only) are materialized, so
+    // the returned frames no longer read the signature pin
     val dupPairs = Materialize.eager(sideSets.groupBy("id1", "id2")
       .agg(max(when(col("id") === col("id1"), col("_sh"))).as("_sh1"),
         max(when(col("id") === col("id2"), col("_sh"))).as("_sh2"))
@@ -288,7 +280,6 @@ object Dedup {
       .select("id1", "id2"))
 
     (norm, dupPairs)
-    } finally sig.unpersist(false)
   }
 
   /** Full transitive closure over verified near-dup pairs: a~b and b~c put
@@ -321,21 +312,6 @@ object Dedup {
       .select(col("vertex").as("id"), col("component").as("rep_id"))
   }
 
-  /** Corpus-level near-dup grouping: MinHash+LSH verified pairs →
-    * connected components (full transitive closure — a~b and b~c group
-    * a, b, c even when (a, c) never verified as a direct pair, the case
-    * chained revisions of one document produce) → every corpus row labeled
-    * with its group representative (min id), duplicate flag, and group size.
-    * `keep(is_dup = false)` is the canonical-per-group filter; `group_size`
-    * feeds duplication-rate stats.
-    *
-    * Scale shape: the CC runs on the verified PAIR graph only (orders of
-    * magnitude below the corpus — near-dup clusters, not all docs), the
-    * corpus join is a left join on id, and group sizes come from one
-    * aggregation over the labeled pair vertices. Reference: deduplication
-    * over pw tables (see exact/minhash ops above); the transitive grouping
-    * matches how Lee et al. 2022 ("Deduplicating Training Data...") cluster
-    * near-dup pairs before keeping one representative per cluster. */
   /** Representative selection POLICY over [[dedupGroups]] output: keep the
     * best-scoring member of each dup group instead of the min-id one — the
     * rule real curation pipelines want (drop the truncated/mojibake copy,
@@ -401,6 +377,21 @@ object Dedup {
         coalesce(col("group_size"), lit(1L)).as("group_size"))
   }
 
+  /** Corpus-level near-dup grouping: MinHash+LSH verified pairs →
+    * connected components (full transitive closure — a~b and b~c group
+    * a, b, c even when (a, c) never verified as a direct pair, the case
+    * chained revisions of one document produce) → every corpus row labeled
+    * with its group representative (min id), duplicate flag, and group size.
+    * `keep(is_dup = false)` is the canonical-per-group filter; `group_size`
+    * feeds duplication-rate stats.
+    *
+    * Scale shape: the CC runs on the verified PAIR graph only (orders of
+    * magnitude below the corpus — near-dup clusters, not all docs), the
+    * corpus join is a left join on id, and group sizes come from one
+    * aggregation over the labeled pair vertices. Reference: deduplication
+    * over pw tables (see exact/minhash ops above); the transitive grouping
+    * matches how Lee et al. 2022 ("Deduplicating Training Data...") cluster
+    * near-dup pairs before keeping one representative per cluster. */
   def dedupGroups(df: DataFrame, id: Column, text: Column,
       k: Int = 5, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.8, bucketCap: Int = DefaultBucketCap): DataFrame = {
@@ -473,6 +464,43 @@ object Dedup {
     * boilerplate key can't go quadratic at corpus scale. */
   val DefaultBucketCap: Int = 4096
 
+  /** Guard observability (r19 advice): when ANY bucket exceeds the cap the
+    * output is the guarded two-tier star, not the exact all-pairs compare —
+    * a behavior a production run must be able to see. The hot-key aggregate
+    * already executes (it feeds the broadcast), so the metric rides it as an
+    * `observe` — zero extra jobs — surfaced two ways: the named observation
+    * (`graft.guardedSelfJoin.*` → any QueryExecutionListener / the streaming
+    * progress metrics) and a WARN log from the per-session listener below. */
+  val GuardObservationPrefix = "graft.guardedSelfJoin."
+  private val guardRunId = new java.util.concurrent.atomic.AtomicLong(0)
+  private val guardLog = org.slf4j.LoggerFactory.getLogger(getClass)
+  private val observedSessions = java.util.Collections.newSetFromMap(
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
+  private def ensureGuardObserver(spark: SparkSession): Unit =
+    if (observedSessions.add(spark))
+      spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+          // the guard node's subtree is referenced many times (cold anti-join,
+          // hot members, tiers) → duplicated physical instances with one
+          // executed copy; merge keeping the executed one's row
+          guardObservations(qe).foreach { case (name, row) =>
+            if (row.getAs[Long]("hot_buckets") > 0L)
+              guardLog.warn(s"guardedSelfJoin [$name]: ${row.getAs[Long]("hot_buckets")} " +
+                s"bucket(s) over the cap (largest ${row.getAs[Long]("max_bucket_rows")} rows) " +
+                "took the two-tier star — output is guarded, not the exact all-pairs compare")
+          }
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      })
+
+  /** The guard's observed metric rows for a finished execution, duplicates
+    * merged (max hot-bucket count wins — the executed instance). */
+  def guardObservations(qe: org.apache.spark.sql.execution.QueryExecution):
+      Map[String, org.apache.spark.sql.Row] =
+    org.apache.spark.sql.GraftExprBridge.observedMetricRows(qe, GuardObservationPrefix,
+      (a, b) => if (a.getAs[Long]("hot_buckets") >= b.getAs[Long]("hot_buckets")) a else b)
+
   /** Shared hot-bucket-guarded band self-join for the whole LSH family
     * (minhashLsh, [[hash64DupPairs]], Similarity.embeddingDupPairs).
     *
@@ -512,43 +540,6 @@ object Dedup {
     * under rescan — the eager hot-key probe freezes the hot-key set at call
     * time and the returned join rescans the input (callers pass persisted /
     * checkpointed frames or pure projections of stable sources; r21). */
-  /** Guard observability (r19 advice): when ANY bucket exceeds the cap the
-    * output is the guarded two-tier star, not the exact all-pairs compare —
-    * a behavior a production run must be able to see. The hot-key aggregate
-    * already executes (it feeds the broadcast), so the metric rides it as an
-    * `observe` — zero extra jobs — surfaced two ways: the named observation
-    * (`graft.guardedSelfJoin.*` → any QueryExecutionListener / the streaming
-    * progress metrics) and a WARN log from the per-session listener below. */
-  val GuardObservationPrefix = "graft.guardedSelfJoin."
-  private val guardRunId = new java.util.concurrent.atomic.AtomicLong(0)
-  private val guardLog = org.slf4j.LoggerFactory.getLogger(getClass)
-  private val observedSessions = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-  private def ensureGuardObserver(spark: SparkSession): Unit =
-    if (observedSessions.add(spark))
-      spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-          // the guard node's subtree is referenced many times (cold anti-join,
-          // hot members, tiers) → duplicated physical instances with one
-          // executed copy; merge keeping the executed one's row
-          guardObservations(qe).foreach { case (name, row) =>
-            if (row.getAs[Long]("hot_buckets") > 0L)
-              guardLog.warn(s"guardedSelfJoin [$name]: ${row.getAs[Long]("hot_buckets")} " +
-                s"bucket(s) over the cap (largest ${row.getAs[Long]("max_bucket_rows")} rows) " +
-                "took the two-tier star — output is guarded, not the exact all-pairs compare")
-          }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-      })
-
-  /** The guard's observed metric rows for a finished execution, duplicates
-    * merged (max hot-bucket count wins — the executed instance). */
-  def guardObservations(qe: org.apache.spark.sql.execution.QueryExecution):
-      Map[String, org.apache.spark.sql.Row] =
-    org.apache.spark.sql.GraftExprBridge.observedMetricRows(qe, GuardObservationPrefix,
-      (a, b) => if (a.getAs[Long]("hot_buckets") >= b.getAs[Long]("hot_buckets")) a else b)
-
   def guardedSelfJoin(buckets: DataFrame, keyCols: Seq[String],
       payloadCols: Seq[String], bucketCap: Int): DataFrame = {
     def keys = keyCols.map(col)
@@ -632,21 +623,16 @@ object Dedup {
     pairUp(cold).unionByName(tier1).unionByName(tier2All).unionByName(tier2Star)
   }
 
-  /** Near-dup pairs of any 64-bit fingerprint table (id, _sig) within
-    * `maxDist` Hamming distance: the SimHash band trick — a pair within
-    * maxDist < bands shares ≥1 exact band, so candidates come from `bands`
-    * equi-joins (never all-pairs), verified with codegen'd bit_count(xor).
-    * Shared by text SimHash and image aHash dedup.
-    *
-    * Hot-bucket guard: buckets larger than `bucketCap` — boilerplate text,
-    * blank images, any degenerate key — would make the self-join quadratic
-    * in that bucket's size before any verify filter runs. Those buckets
-    * take [[guardedSelfJoin]]'s two-tier star (sub-clustered by the full
-    * signature, so several distinct clone clusters in one bucket EACH keep
-    * deterministic recall — the r8 single-rep star's multi-cluster hazard
-    * is closed); transitive grouping ([[dupGroups]] / minhashLsh's
-    * star-merge) reconnects each cluster. `bucketCap = Int.MaxValue`
-    * disables the guard (the honest unguarded control). */
+  /** Hot-CLUSTER cap for [[semantic]]. Sized one octave above the band
+    * family's [[DefaultBucketCap]]: SemDeDup's clusters are corpus/k (the
+    * paper grows k with the corpus, so a WELL-RUN deployment keeps them in
+    * the low thousands and every cluster takes the exact all-pairs
+    * compare), while a degenerate corpus — every embedding identical, or an
+    * LSH→k-means assignment collapsing into one label — piles far past it
+    * and must not go quadratic. 16384² /2 ≈ 134M candidate pairs is the
+    * worst exact per-cluster join; past that the two-tier star takes over. */
+  val SemanticClusterCap: Int = 16384
+
   /** SemDeDup-style SEMANTIC dedup (Abbas et al. 2023, "SemDeDup: Data-
     * efficient learning at web-scale through semantic deduplication",
     * arXiv:2303.09540): cluster the embedding space, then prune WITHIN each
@@ -662,77 +648,71 @@ object Dedup {
     * floor-quantized vectors (exact BIGINTs) so the threshold compare is
     * engine-portable — the same fold the DuckDB oracle replays.
     * Returns (id, label, rep_id, is_dup). */
-  /** Hot-CLUSTER cap for [[semantic]]. Sized one octave above the band
-    * family's [[DefaultBucketCap]]: SemDeDup's clusters are corpus/k (the
-    * paper grows k with the corpus, so a WELL-RUN deployment keeps them in
-    * the low thousands and every cluster takes the exact all-pairs
-    * compare), while a degenerate corpus — every embedding identical, or an
-    * LSH→k-means assignment collapsing into one label — piles far past it
-    * and must not go quadratic. 16384² /2 ≈ 134M candidate pairs is the
-    * worst exact per-cluster join; past that the two-tier star takes over. */
-  val SemanticClusterCap: Int = 16384
-
   def semantic(points: DataFrame, id: Column, vec: Column, dim: Int, k: Int,
       threshold: Double, nPlanes: Int = 4, nTables: Int = 4,
-      lloydIters: Int = 2, clusterCap: Int = SemanticClusterCap): DataFrame = {
+      lloydIters: Int = 2, clusterCap: Int = SemanticClusterCap): DataFrame =
+    Materialize.scoped { pin =>
     val labeled = Clustering.viaLsh(points, id, vec, dim, k, nPlanes, nTables, lloydIters)
     val q = points.select(id.cast("long").as("id"),
       Clustering.quantize(vec).cast("array<double>").as("_qv"))
     // assignment + quantized vectors feed both sides of the within-cluster
-    // join: persist + eager count (the AQE cache-race lesson, see minhashCore)
-    val pv = labeled.join(q, "id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      pv.count()
-      // within-cluster candidates through the family-shared guarded
-      // self-join (r18 judge #1 — this join had no hot-cluster guard): the
-      // cluster label is the bucket key and the quantized vector is the
-      // sub-key, so identical embeddings collide in tier 1 and an
-      // adversarial single-cluster pileup emits a LINEAR min-id star
-      // instead of O(cluster²) all-pairs. Clusters ≤ clusterCap keep the
-      // paper's exact within-cluster compare (pairs come out id1 < id2),
-      // so min(id1) per id2 is exactly "smallest smaller-id member within
-      // threshold".
-      val buckets = pv.select(col("id"), col("label"),
-        col("_qv"), col("_qv").as("_subKey"))
-      val near = guardedSelfJoin(buckets, Seq("label"), Seq("_qv"), clusterCap)
-        .filter(Similarity.cosine(col("_qv_1"), col("_qv_2")) >= threshold)
-        .groupBy(col("id2").as("id")).agg(min("id1").as("rep_id"))
-      Materialize.eager(pv.join(near, Seq("id"), "left_outer")
-        .select(col("id"), col("label"),
-          coalesce(col("rep_id"), col("id")).as("rep_id"),
-          col("rep_id").isNotNull.as("is_dup")))
-    } finally pv.unpersist(false)
+    // join: pinned and counted first (the AQE cache race)
+    val pv = pin(labeled.join(q, "id"))
+    pv.count()
+    // within-cluster candidates through the family-shared guarded
+    // self-join (r18 judge #1 — this join had no hot-cluster guard): the
+    // cluster label is the bucket key and the quantized vector is the
+    // sub-key, so identical embeddings collide in tier 1 and an
+    // adversarial single-cluster pileup emits a LINEAR min-id star
+    // instead of O(cluster²) all-pairs. Clusters ≤ clusterCap keep the
+    // paper's exact within-cluster compare (pairs come out id1 < id2),
+    // so min(id1) per id2 is exactly "smallest smaller-id member within
+    // threshold".
+    val buckets = pv.select(col("id"), col("label"),
+      col("_qv"), col("_qv").as("_subKey"))
+    val near = guardedSelfJoin(buckets, Seq("label"), Seq("_qv"), clusterCap)
+      .filter(Similarity.cosine(col("_qv_1"), col("_qv_2")) >= threshold)
+      .groupBy(col("id2").as("id")).agg(min("id1").as("rep_id"))
+    Materialize.eager(pv.join(near, Seq("id"), "left_outer")
+      .select(col("id"), col("label"),
+        coalesce(col("rep_id"), col("id")).as("rep_id"),
+        col("rep_id").isNotNull.as("is_dup")))
   }
 
+  /** Near-dup pairs of any 64-bit fingerprint table (id, _sig) within
+    * `maxDist` Hamming distance: the SimHash band trick — a pair within
+    * maxDist < bands shares ≥1 exact band, so candidates come from `bands`
+    * equi-joins (never all-pairs), verified with codegen'd bit_count(xor).
+    * Shared by text SimHash and image aHash dedup.
+    *
+    * Hot-bucket guard: buckets larger than `bucketCap` — boilerplate text,
+    * blank images, any degenerate key — would make the self-join quadratic
+    * in that bucket's size before any verify filter runs. Those buckets
+    * take [[guardedSelfJoin]]'s two-tier star (sub-clustered by the full
+    * signature, so several distinct clone clusters in one bucket EACH keep
+    * deterministic recall — the r8 single-rep star's multi-cluster hazard
+    * is closed); transitive grouping ([[dupGroups]] / minhashLsh's
+    * star-merge) reconnects each cluster. `bucketCap = Int.MaxValue`
+    * disables the guard (the honest unguarded control). */
   def hash64DupPairs(sigs: DataFrame, maxDist: Int, bands: Int,
-      bucketCap: Int = DefaultBucketCap): DataFrame = {
+      bucketCap: Int = DefaultBucketCap): DataFrame = Materialize.scoped { pin =>
     val width = 64 / bands
     val mask = (1L << width) - 1
-    val withSig = sigs
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Eager materialization before any downstream plan compiles: AQE runs
-      // the broadcast/join subqueries as parallel jobs that would otherwise
-      // race to fill the unpopulated cache (same measured effect as
-      // minhashLsh's sig.count(), 13 s → 4 s at sf0.1).
-      withSig.count()
-      val bandExprs = (0 until bands).map(b =>
-        shiftright(col("_sig"), b * width).bitwiseAND(lit(mask)))
-      // _subKey = the full signature: exact clones collide in tier 1
-      val banded = withSig.select(col("id"), col("_sig"), col("_sig").as("_subKey"),
-        posexplode(array(bandExprs: _*)).as(Seq("_band", "_key")))
-      val pairs = guardedSelfJoin(banded, Seq("_band", "_key"), Seq("_sig"), bucketCap)
-      // Materialize the NARROW verified pairs (localCheckpoint truncates the
-      // lineage so the returned frame no longer references the signature
-      // cache — blocks are ContextCleaner-managed, unlike persist entries),
-      // then release the cache in finally: repeated same-session calls no
-      // longer leak a cache entry per invocation.
-      Materialize.eager(pairs
-        .dropDuplicates("id1", "id2")
-        .filter(hammingDist(col("_sig_1"), col("_sig_2")) <= maxDist)
-        .select(col("id1"), col("id2"),
-          hammingDist(col("_sig_1"), col("_sig_2")).as("hamming")))
-    } finally withSig.unpersist(false)
+    // pinned + counted before any downstream plan compiles (AQE cache race)
+    val withSig = pin(sigs)
+    withSig.count()
+    val bandExprs = (0 until bands).map(b =>
+      shiftright(col("_sig"), b * width).bitwiseAND(lit(mask)))
+    // _subKey = the full signature: exact clones collide in tier 1
+    val banded = withSig.select(col("id"), col("_sig"), col("_sig").as("_subKey"),
+      posexplode(array(bandExprs: _*)).as(Seq("_band", "_key")))
+    val pairs = guardedSelfJoin(banded, Seq("_band", "_key"), Seq("_sig"), bucketCap)
+    // Materialize the NARROW verified pairs: the returned frame no longer
+    // references the signature cache, so the scope can release it
+    Materialize.eager(pairs
+      .dropDuplicates("id1", "id2")
+      .filter(hammingDist(col("_sig_1"), col("_sig_2")) <= maxDist)
+      .select(col("id1"), col("id2"),
+        hammingDist(col("_sig_1"), col("_sig_2")).as("hamming")))
   }
 }

