@@ -4,22 +4,31 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
-import graft.operators.{Bpe, Dedup, Materialize, TextOps, TrainPrep}
+import graft.operators.{Bpe, Dedup, Materialize, TextOps, TrainPrep, Utils}
 
 /** End-to-end LLM training-data curation pipeline — the composition a user
   * of the reference would run daily, expressed entirely in this library's
   * operators. Stages (each one a single declarative DataFrame transform, so
-  * Catalyst fuses what it can and every shuffle is one the algorithm needs):
+  * Catalyst fuses what it can):
   *
   *   1. analyze    — language-ID, quality score, token counts, PII audit
   *   2. filter     — keep high-quality docs in the target language
-  *   3. exact dedup — md5-fingerprint groupBy, keep min-id representative
+  *   3. exact dedup — one md5-fingerprint grouping keeps each group's
+  *                   min-id row
   *   4. near dedup — MinHash+LSH (banded buckets + prefilter + verify),
-  *                   drop every non-representative member
-  *   5. decontaminate — remove docs sharing a token window with the eval set
+  *                   anti-join away the larger id of every verified pair
+  *   5. decontaminate — anti-join away docs sharing a token window with
+  *                   the eval set
   *   6. sample     — deterministic weighted downsampling (rerun-stable)
   *   7. split      — hash-based train/val/test (leak-free by construction)
   *   8. pack       — lay docs end-to-end into fixed token-budget windows
+  *
+  * Each stage is computed once. The exact-deduped corpus is the one frame
+  * several actions read (the minhash signature count, the verified-pairs
+  * checkpoint, the caller's action), so it is the one fence; near dedup
+  * and decontamination remove rows with an anti-join on the ids they
+  * reject. Doc ids are the key: they are assumed unique, and a null id
+  * never survives exact dedup.
   *
   * Run: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 runMain
   *      graft.examples.TrainDataPipeline
@@ -89,20 +98,29 @@ object TrainDataPipeline {
       else TextOps.gopherStats(kept0, col("text"))
         .filter(col("gopher_pass")).drop(TextOps.gopherStatNames: _*)
 
-    // 3. exact dedup: fingerprint groupBy, min-id representative survives
-    val reps = Dedup.exact(kept, col("doc_id"), TextOps.fingerprintMd5(col("text")))
-    val exactDeduped = kept.join(reps.select(col("rep_id").as("doc_id")), "doc_id")
+    // 3. exact dedup (Dedup.exact's rule): per md5 fingerprint the min-id
+    // row survives whole, in one grouping that reads `kept` once. The one
+    // fence: minhash's signature count, its verified-pairs checkpoint and
+    // the caller's action all read this frame
+    val exactDeduped = Materialize.eager(Utils.argminRows(
+      kept.filter(col("doc_id").isNotNull), Seq(TextOps.fingerprintMd5(col("text"))),
+      value = col("doc_id"), tieBreak = col("doc_id")))
 
-    // 4. near dedup: every (id, rep, is_dup) row with is_dup keeps only reps
-    val near = Dedup.minhashLsh(exactDeduped, col("doc_id"), col("text"))
+    // 4. near dedup: minhashLsh flags a doc is_dup exactly when it is the
+    // larger id of a verified pair (id1 < id2), so the pairs' id2 side is
+    // the drop list
+    val pairs = Dedup.minhashLshPairs(exactDeduped, col("doc_id"), col("text"))
     val nearDeduped = exactDeduped.join(
-      near.filter(!col("is_dup")).select(col("id").as("doc_id")), "doc_id")
+      pairs.select(col("id2").as("doc_id")), Seq("doc_id"), "left_anti")
 
-    // 5. decontaminate: drop docs sharing any token window with the eval set
-    // (decontaminate returns the CONTAMINATED rows + audit counts)
-    val contaminated = TrainPrep.decontaminate(nearDeduped, col("doc_id"), col("text"),
-      evalSet, col("eval_id"), col("eval_text"), k = 8)
-    val clean = nearDeduped.join(contaminated.select("doc_id"), Seq("doc_id"), "left_anti")
+    // 5. decontaminate: drop docs sharing any 8-token window with the eval
+    // set — TrainPrep.decontaminate's flagged docs, without the audit
+    // counts it would aggregate only for this path to discard
+    val evalWindows = TrainPrep.tokenWindowHashes(evalSet, col("eval_id"), col("eval_text"), 8)
+    val contaminated = TrainPrep.tokenWindowHashes(nearDeduped, col("doc_id"), col("text"), 8)
+      .join(evalWindows.select("_h"), Seq("_h"), "left_semi")
+      .select(col("id").as("doc_id"))
+    val clean = nearDeduped.join(contaminated, Seq("doc_id"), "left_anti")
 
     // 6. deterministic weighted sampling: quality-proportional keep rate
     val sampled = TrainPrep.sampleByWeight(clean, col("doc_id"),
@@ -197,15 +215,12 @@ object TrainDataPipeline {
       if (strictMix) TrainPrep.mixturePlanStrict(scored, source, words, mix)
       else TrainPrep.mixturePlanFilled(scored, source, words, mix, tokenBudget)
     val rates = plan.select(col("src"), (col("rate_micro") / lit(1e6)).as("p"))
-    // materialize the SELECTED corpus once before curation: curate's stages
-    // run several eager actions (the minhash signature count, checkpoint
-    // fences), and each would otherwise re-evaluate the whole DSIR scoring
-    // + rank + mixture DAG upstream (measured 67 s → ~7 s at sf0.1). The
-    // checkpoint truncates lineage, so the returned frame doesn't pin the
-    // scoring plan either.
-    val sampled = Materialize.eager(
-      TrainPrep.sampleStratified(scored, col("doc_id"), source, rates)
-        .select("doc_id", "text"))
+    // the sampled corpus has one consumer: curate's exact-dedup fence is
+    // its first action and the only one that reads it, so the DSIR scoring
+    // + mixture DAG upstream runs once without a fence of its own, and the
+    // returned frame reads the fence's checkpoint, not the scoring plan
+    val sampled = TrainPrep.sampleStratified(scored, col("doc_id"), source, rates)
+      .select("doc_id", "text")
     curate(sampled, evalSet)
   }
 

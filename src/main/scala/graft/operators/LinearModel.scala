@@ -99,10 +99,11 @@ object LinearModel {
   /** End-to-end: features → train on the labeled frame → score every row.
     * Returns (id, y, score, predicted, correct). */
   def perceptronClassify(df: DataFrame, id: Column, text: Column,
-      label: Column, dim: Int = 32, iters: Int = 3): DataFrame = Materialize.scoped { pin =>
-    val feat = pin(hashedFeatures(df, id, text, dim)
+      label: Column, dim: Int = 32, iters: Int = 3): DataFrame = {
+    // read by every training pass AND by the returned scores: checkpointed
+    // once, so the caller's action does not re-run the features + label join
+    val feat = Materialize.eager(hashedFeatures(df, id, text, dim)
       .join(df.select(id.cast("long").as("id"), label.cast("long").as("y")), "id"))
-    feat.count() // single materialization for all passes
     val (w, b) = perceptronTrain(feat, col("x"), col("y"), dim, iters)
     val score = classify(feat, col("x"), w, b)
     feat.select(col("id"), col("y"),

@@ -377,33 +377,35 @@ object Similarity {
       .select("id1", "id2", "score")
   }
 
-  /** Product-quantization ANN with asymmetric distance computation (Jégou
-    * et al. 2011, "Product Quantization for Nearest Neighbor Search") — the
-    * 100 TB memory/IO path the reference's index zoo (stdlib/indexing)
-    * stops short of: each corpus vector is stored as `m` small codebook
-    * codes (m·log2(ksub) bits instead of dim·32), and a query scans codes
-    * with per-subspace lookup tables instead of full vectors.
-    *
-    * Engine shape, all deterministic / oracle-replayable:
-    *   - codebooks: per-subspace Lloyd over 2^40-quantized integer
-    *     subvectors (ivfKnn's exact-Long-sum technique), seeds = first
-    *     `ksub` corpus rows in md5 order, one (j, cell)-keyed pass chain —
-    *     the m trainings ride ONE dataframe (posexplode over j), so
-    *     subspace count changes the row count, not the plan.
-    *   - codes: argmax per-subspace cosine, smaller-cell tie-break;
-    *     packed to an m-slot array per vector (the "PQ code").
-    *   - ADC: per query, a (m × ksub) table of subspace similarities against
-    *     the codebooks (tiny: built from a broadcast join, collected into
-    *     one array struct per query), then ONE broadcast join onto the
-    *     packed codes with the score as a fixed-order m-term lookup sum —
-    *     the corpus-side scan reads only the code arrays.
-    *   - score = Σ_j cos(q_j, centroid_{j,code_j}) summed left-to-right
-    *     (IEEE-exact twin of the oracle's ordered list_reduce).
-    *
-    * The `ksub` seed-cell ids are collected to freeze the code→table-index
-    * mapping — bounded by ksub (same bounded-collect contract as
-    * Clustering's LSH reps). Compose with ivfKnn cells for IVFADC when the
-    * corpus also needs coarse pruning. */
+  // ── Product quantization: ANN with asymmetric distance computation ─────
+  //
+  // Jégou et al. 2011, "Product Quantization for Nearest Neighbor Search" —
+  // the 100 TB memory/IO path the reference's index zoo (stdlib/indexing)
+  // stops short of: each corpus vector is stored as `m` small codebook
+  // codes (m·log2(ksub) bits instead of dim·32), and a query scans codes
+  // with per-subspace lookup tables instead of full vectors.
+  //
+  // Engine shape, all deterministic / oracle-replayable:
+  //   - codebooks: per-subspace Lloyd over 2^40-quantized integer
+  //     subvectors (ivfKnn's exact-Long-sum technique), seeds = first
+  //     `ksub` corpus rows in md5 order, one (j, cell)-keyed pass chain —
+  //     the m trainings ride ONE dataframe (posexplode over j), so
+  //     subspace count changes the row count, not the plan.
+  //   - codes: argmax per-subspace cosine, smaller-cell tie-break;
+  //     packed to an m-slot array per vector (the "PQ code").
+  //   - ADC: per query, a (m × ksub) table of subspace similarities against
+  //     the codebooks (tiny: built from a broadcast join, collected into
+  //     one array struct per query), then ONE broadcast join onto the
+  //     packed codes with the score as a fixed-order m-term lookup sum —
+  //     the corpus-side scan reads only the code arrays.
+  //   - score = Σ_j cos(q_j, centroid_{j,code_j}) summed left-to-right
+  //     (IEEE-exact twin of the oracle's ordered list_reduce).
+  //
+  // The `ksub` seed-cell ids are collected to freeze the code→table-index
+  // mapping — bounded by ksub (same bounded-collect contract as
+  // Clustering's LSH reps). Compose with ivfKnn cells for IVFADC when the
+  // corpus also needs coarse pruning.
+
   /** A built PQ index: eagerly-materialized codebooks (m × ksub rows) and
     * packed per-vector codes; `cellIds` freezes the code → lookup-table
     * index mapping. Build once with [[pqIndex]], serve many query batches

@@ -24,6 +24,16 @@ class LinearModelSpec extends AnyFunSuite {
     assert(acc == 1.0, s"expected convergence, got $acc")
   }
 
+  test("perceptronClassify's result reads its feature checkpoint, not the features") {
+    val out = LinearModel.perceptronClassify(separable, col("id"), col("text"),
+      col("y"), dim = 16, iters = 2)
+    // the hashedFeatures kernel is a MapPartitions node; the label join
+    // would show as a join node
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("MapPartitions") && !plan.contains("Join"),
+      s"the caller's action re-runs the feature plan:\n$plan")
+  }
+
   test("training is deterministic and partition-invariant") {
     def run(parts: Int) = {
       val feat = LinearModel.hashedFeatures(separable.repartition(parts),

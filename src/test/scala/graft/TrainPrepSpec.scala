@@ -163,6 +163,79 @@ class TrainPrepSpec extends AnyFunSuite {
     assert(run() == out, "pipeline must be deterministic across reruns")
   }
 
+  /** `TrainDataPipeline.curate` with its default options in its join-back
+    * composition: each dedup step joins its kept-id list back onto its
+    * input, decontamination goes through `TrainPrep.decontaminate`, and no
+    * stage is materialized. The reference the one-pass curate must equal. */
+  private def joinBackCurate(docs: DataFrame, evalSet: DataFrame, budget: Long): DataFrame = {
+    import graft.operators.{Dedup, TextOps}
+    val (redacted, nEmails, nPhones) = TrainPrep.piiRedact(col("text"))
+    val kept = docs
+      .select(col("doc_id"), redacted.as("text"), (nEmails + nPhones).as("pii_hits"))
+      .select(col("doc_id"), col("text"), col("pii_hits"),
+        TextOps.langId(col("text")).as("lang"),
+        TextOps.qualityScore(col("text")).as("quality"),
+        TextOps.tokenCount(col("text")).as("n_tokens"))
+      .filter(col("lang") === "en" && col("quality") >= 0.3)
+    val reps = Dedup.exact(kept, col("doc_id"), TextOps.fingerprintMd5(col("text")))
+    val exactDeduped = kept.join(reps.select(col("rep_id").as("doc_id")), "doc_id")
+    val near = Dedup.minhashLsh(exactDeduped, col("doc_id"), col("text"))
+    val nearDeduped = exactDeduped.join(
+      near.filter(!col("is_dup")).select(col("id").as("doc_id")), "doc_id")
+    val contaminated = TrainPrep.decontaminate(nearDeduped, col("doc_id"), col("text"),
+      evalSet, col("eval_id"), col("eval_text"), k = 8)
+    val clean = nearDeduped.join(contaminated.select("doc_id"), Seq("doc_id"), "left_anti")
+    val sampled = TrainPrep.sampleByWeight(clean, col("doc_id"),
+      least(col("quality") + 0.5, lit(1.0)))
+    TrainPrep.packSequences(
+      TrainPrep.splitByHash(sampled, col("doc_id")).filter(col("split") === "train")
+        .withColumn("_shard", pmod(CrossHash.md5Long(col("doc_id")), lit(16L))),
+      instance = col("_shard"), order = col("doc_id"), nTokens = col("n_tokens"),
+      budget = budget)
+  }
+
+  test("TrainDataPipeline.curate == the join-back composition where near-dups verify") {
+    import graft.examples.TrainDataPipeline
+    // MinhashCorpus's families and singletons, led by a stopword so they
+    // pass the language gate: every family member verifies against the rest
+    val english = (MinhashCorpus.families ++ MinhashCorpus.singletons)
+      .map { case (id, t) => (id, s"the $t") }
+    val text = english.toMap
+    val clones = Seq(
+      2000L -> ("  " + text(1L).replace(" ", "   ")), // whitespace variant of 1: dropped
+      50L -> text(1003L),                             // smaller id: 1003 drops instead
+      7L -> text(202L))                               // 202 drops; 7 reps family 2
+    val docs = (english ++ clones).toDF("doc_id", "text")
+    def window(t: String, from: Int, n: Int) = t.split(" ").slice(from, from + n).mkString(" ")
+    val evalSet = Seq(
+      (1L, s"eval ${window(text(1005L), 2, 8)} end"),   // 8 shared tokens: 1005 drops
+      (2L, s"eval ${window(text(300L), 1, 8)} end"),    // family 3's base: all 4 drop
+      (3L, s"eval ${window(text(1006L), 2, 7)} end"))   // 7 tokens: 1006 stays
+      .toDF("eval_id", "eval_text")
+
+    def rows(df: DataFrame) = (df.columns.toSeq, df.dtypes.toSeq,
+      df.collect().map(_.toString).sorted.toSeq)
+    val out = TrainDataPipeline.curate(docs, evalSet, budget = 64)
+    assert(rows(out) == rows(joinBackCurate(docs, evalSet, budget = 64)))
+
+    // the output is exactly the exact reps that are also near-dup reps and
+    // touch no eval window, less what the id-hash sample and split drop
+    val passing = TrainPrep.splitByHash(TrainPrep.sampleByWeight(
+        docs.withColumn("quality", graft.operators.TextOps.qualityScore(col("text"))),
+        col("doc_id"), least(col("quality") + 0.5, lit(1.0))), col("doc_id"))
+      .filter(col("split") === "train").select("doc_id").as[Long].collect().toSet
+    val survivors = Set(0L, 7L, 50L, 100L, 400L, 500L) ++
+      (1000L to 1009L).filterNot(Set(1003L, 1005L))
+    assert(out.select("doc_id").as[Long].collect().toSet == (survivors & passing))
+    // and each removal rule drops a doc the sample would have kept
+    val removed = Map(
+      "exact" -> Set(2000L, 1003L, 202L),
+      "near" -> ((0L to 5L).flatMap(f => (1L to 3L).map(100L * f + _)).toSet - 202L + 200L),
+      "decontaminate" -> Set(1005L, 300L))
+    removed.foreach { case (rule, ids) =>
+      assert((ids & passing).nonEmpty, s"$rule removes nothing the sample keeps") }
+  }
+
   test("TrainDataPipeline.selectAndCurate: DSIR floor + mixture rates gate the corpus") {
     import graft.examples.TrainDataPipeline
     // two domains across two sources; the target is science-flavored
